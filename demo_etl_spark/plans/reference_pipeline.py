@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from demo_etl_spark.context import DEFAULT_CONTEXT, RunContext
 from demo_etl_spark.functions import (
@@ -38,6 +37,7 @@ from demo_etl_spark.io import (
     create_external_table,
     create_table_if_not_exists,
     drop_table,
+    register_persist,
     verify_table_sql,
 )
 from demo_etl_spark.lineage import LineageTracker
@@ -127,8 +127,9 @@ def job2_asset(
     tracker: LineageTracker | None = None,
 ) -> DataFrame:
     t = tracker or LineageTracker(ctx)
-    # C1: the one fanned-out relation is persisted (generate-asset.scala:47)
-    sales = sales_data.persist(StorageLevel.MEMORY_AND_DISK)
+    # C1: the one fanned-out relation is persisted (generate-asset.scala:47);
+    # tracked, so clear_operator_memos() releases it
+    sales = register_persist(sales_data)
 
     # Branch 1 — customer analytics (generate-asset.scala:57-88)
     cust = (

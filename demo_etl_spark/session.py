@@ -11,6 +11,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark keeps Janino-compiled generated classes in a JVM-wide cache keyed
+# on the generated source. Its default of 100 entries is far below what
+# one run needs, so every re-run recompiled everything. Measured at
+# sf0.001 on 4 cores: the 206 registered queries plus the 9 memo warmers
+# compile 3,143 classes on a first pass; with this size a second pass
+# recompiled 130 of them. On the 15 star queries of the benchmark, a
+# re-run recompiled ~376 classes with the default and 0-4 with this size.
+# 4096 holds the whole registry with headroom.
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(
     app_name: str = "demo-etl-spark",
@@ -29,9 +39,10 @@ def get_spark(
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "4"))
     if shuffle_partitions is None:
-        # local mode: one shuffle partition per core is the sweet spot at
-        # test scale; on a real cluster this is sized to data volume and
-        # AQE coalesces down from a higher initial value.
+        # local mode: one shuffle partition per core, but never fewer
+        # than 8, so AQE has room to coalesce at test scale; on a real
+        # cluster this is sized to data volume and AQE coalesces down
+        # from a higher initial value.
         shuffle_partitions = max(cpus, 8)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -47,6 +58,8 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # static conf: only takes effect on the JVM's first session
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # local mode: driver == executor; size the heap for all cores'
         # concurrent task buffers or full GCs serialize the whole session
         # (observed: 8g/32 threads → queries degrade 14s → 474s)

@@ -313,6 +313,20 @@ def ephemeral_checkpoint_dir() -> str:
     return tempfile.mkdtemp(prefix="demo_etl_stream_ckpt_", dir=base)
 
 
+def drain_shuffle_partitions(session_parts: str | None) -> int:
+    """State partitions for one drain: ``DEMO_ETL_STREAM_SHUFFLE`` when set,
+    else the session's shuffle partitions capped at 4. Raises ValueError
+    on a knob value that is not an integer >= 1 (0 breaks the drain)."""
+    env_parts = os.environ.get("DEMO_ETL_STREAM_SHUFFLE")
+    if env_parts:
+        if not env_parts.isdecimal() or int(env_parts) < 1:
+            raise ValueError(
+                f"DEMO_ETL_STREAM_SHUFFLE must be an integer >= 1, got {env_parts!r}"
+            )
+        return int(env_parts)
+    return min(4, int(session_parts)) if session_parts and session_parts.isdigit() else 4
+
+
 def run_available_now(
     stream_df: DataFrame,
     table_name: str,
@@ -338,11 +352,7 @@ def run_available_now(
     # deployment sets it to state volume / target partition size).
     conf = spark.conf
     prev = conf.get("spark.sql.shuffle.partitions")
-    env_parts = os.environ.get("DEMO_ETL_STREAM_SHUFFLE")
-    if env_parts and env_parts.isdigit():
-        drain_parts = int(env_parts)
-    else:
-        drain_parts = min(4, int(prev)) if prev and prev.isdigit() else 4
+    drain_parts = drain_shuffle_partitions(prev)
     conf.set("spark.sql.shuffle.partitions", str(drain_parts))
     # State-store provider knob (r14 verdict item 5): default stays
     # Spark's HDFSBackedStateStoreProvider (tiny per-drain state on the

@@ -890,6 +890,33 @@ def test_transform_with_state_matches_batch_totals(spark, sf_dir):
     assert got == exp
 
 
+def test_stream_shuffle_knob_rejects_bad_values(spark, sf_dir, monkeypatch):
+    """DEMO_ETL_STREAM_SHUFFLE must be an integer >= 1: a bad value fails
+    the drain before it starts and leaves the session conf untouched."""
+    from demo_etl_spark.streaming.event_streams import (
+        drain_shuffle_partitions,
+        read_events_stream,
+        run_available_now,
+        tumbling_stream,
+    )
+
+    monkeypatch.setenv("DEMO_ETL_STREAM_SHUFFLE", "3")
+    assert drain_shuffle_partitions("8") == 3
+    monkeypatch.delenv("DEMO_ETL_STREAM_SHUFFLE")
+    assert drain_shuffle_partitions("8") == 4
+    assert drain_shuffle_partitions("2") == 2
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    for bad in ("0", "-2", "four", "2.5"):
+        monkeypatch.setenv("DEMO_ETL_STREAM_SHUFFLE", bad)
+        with pytest.raises(ValueError, match="DEMO_ETL_STREAM_SHUFFLE"):
+            run_available_now(
+                tumbling_stream(read_events_stream(spark, sf_dir)), "bad_knob_test"
+            )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert not spark.catalog.tableExists("bad_knob_test")
+
+
 def test_incremental_dedup_verdicts(spark):
     """Shard doc 17 is a near-copy of corpus doc 3 (drop -> is_new
     False, best_match 3); shard doc 27 is unique text (is_new True with

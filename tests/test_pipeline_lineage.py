@@ -70,6 +70,30 @@ def test_lineage_registry_and_dot(spark, pipeline_result):
     assert dot.startswith("digraph") and "sales_analytics_asset" in dot
 
 
+def test_pipeline_persist_released_by_clear_operator_memos(spark, tmp_path):
+    """Job 2's persisted sales relation is tracked: clearing the operator
+    memos leaves no persisted RDD from the pipeline behind, so repeated
+    runs in one session do not pile up cached copies."""
+    from demo_etl_spark import io
+    from demo_etl_spark.context import RunContext
+    from demo_etl_spark.fixtures import FixtureConfig, generate_fixtures
+    from demo_etl_spark.plans.reference_pipeline import run_reference_pipeline
+
+    def persisted_rdds() -> set[int]:
+        return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+    before = persisted_rdds()
+    fx = generate_fixtures(
+        spark, FixtureConfig(n_customers=30, n_products=12, n_orders=150)
+    )
+    run_reference_pipeline(
+        spark, str(tmp_path), RunContext(job_id="job-test-persist"), fx
+    )
+    assert persisted_rdds() - before, "job 2 persists its sales relation"
+    io.clear_operator_memos()
+    assert persisted_rdds() - before == set()
+
+
 def test_pipeline_framework_stage_verification(spark, tmp_path):
     from demo_etl_spark.plans import Pipeline, Stage
 
