@@ -128,7 +128,7 @@ def build_keep_best(
 ) -> DataFrame:
     return keep_best_per_cluster(
         load_star(spark, sf_dir)["documents"],
-        _dedup._cached_clusters(spark, sf_dir, ctx),
+        _dedup._cached_clusters(spark, sf_dir),
     )
 
 

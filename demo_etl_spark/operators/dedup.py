@@ -38,23 +38,14 @@ import random as _random
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import os as _os
-
 from demo_etl_spark.context import DEFAULT_CONTEXT, RunContext
 from demo_etl_spark.functions.fixedpoint import round_div, round_div_expr
 from demo_etl_spark.io import (
     load_star,
-    register_cache_clearer,
     register_memo_warmer,
     register_persist,
+    session_memo,
 )
-
-# The hashed shingle index feeds four registered queries (ngram, minhash,
-# clusters, curation's near-dup stage) — memoize the persisted index per
-# (application, sf_dir, max_df) so the split/explode/hash work happens
-# once per bench/test run (C1 discipline at the operator layer).
-_INDEX_CACHE: dict[tuple[str, str, int | None], "DataFrame"] = {}
-register_cache_clearer(_INDEX_CACHE.clear)
 
 SHINGLE_WORDS = 3
 JACCARD_THRESHOLD = 0.8
@@ -180,8 +171,12 @@ def _jaccard_from_common(
     )
 
 
+@session_memo
 def _cached_index(spark: SparkSession, sf_dir: str, max_df: int | None) -> DataFrame:
-    """Session memo of the hashed inverted shingle index.
+    """Session memo of the hashed inverted shingle index. It feeds four
+    registered queries (ngram, minhash, clusters, curation's near-dup
+    stage), so the split/explode/hash work happens once per session (C1
+    discipline at the operator layer).
 
     r14: ONE persisted base — the UNCAPPED index — serves every cap.
     ``_indexed_shingles`` computes df over ALL shingles and applies the
@@ -196,20 +191,10 @@ def _cached_index(spark: SparkSession, sf_dir: str, max_df: int | None) -> DataF
     the df > max_df boilerplate rows the capped persist used to drop —
     MEMORY_AND_DISK absorbs the delta, and capped consumers pay a
     trivial in-memory filter per scan."""
-    base_key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), None)
-    base = _INDEX_CACHE.get(base_key)
-    if base is None:
-        docs = load_star(spark, sf_dir)["documents"]
-        base = register_persist(_indexed_shingles(docs, None))
-        _INDEX_CACHE[base_key] = base
     if max_df is None:
-        return base
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), max_df)
-    sh = _INDEX_CACHE.get(key)
-    if sh is None:
-        sh = base.filter(F.col("df") <= max_df)
-        _INDEX_CACHE[key] = sh
-    return sh
+        docs = load_star(spark, sf_dir)["documents"]
+        return register_persist(_indexed_shingles(docs, None))
+    return _cached_index(spark, sf_dir, None).filter(F.col("df") <= max_df)
 
 
 def ngram_jaccard_pairs(
@@ -368,77 +353,53 @@ def build_exact(spark: SparkSession, sf_dir: str, ctx: RunContext = DEFAULT_CONT
     return exact_dedup(load_star(spark, sf_dir)["documents"], ctx)
 
 
-#: default-parameters-only memo of the per-doc distinct-shingle COUNTS
-#: over the df-capped index (r14) — the (doc_id, n_shingles) aggregate
-#: is recomputed TWICE per consumer plan (it joins both pair sides) in
-#: the jaccard/minhash pair builds (warm stage), the containment seat
-#: and the incremental seat. Doc-count rows, eager checkpoint. The r14
-#: "tried and reverted" note on incremental_dedup's per-query sizes
-#: checkpoint stands for the PER-QUERY barrier; this is the session
-#: memo with four registered consumers (the item-26 distinction).
-_SIZES_CACHE: dict[tuple[str, str], DataFrame] = {}
-register_cache_clearer(_SIZES_CACHE.clear)
-
-
+@session_memo
 def _cached_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    sizes = _SIZES_CACHE.get(key)
-    if sizes is None:
-        sizes = (
-            _cached_index(spark, sf_dir, MAX_SHINGLE_DF)
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_shingles"))
-            .localCheckpoint(eager=True)
-        )
-        _SIZES_CACHE[key] = sizes
-    return sizes
+    """Per-doc distinct-shingle COUNTS over the df-capped index (r14) —
+    the (doc_id, n_shingles) aggregate is recomputed TWICE per consumer
+    plan (it joins both pair sides) in the jaccard/minhash pair builds
+    (warm stage), the containment seat and the incremental seat.
+    Doc-count rows, eager checkpoint. The r14 "tried and reverted" note
+    on incremental_dedup's per-query sizes checkpoint stands for the
+    PER-QUERY barrier; this is the session memo with four registered
+    consumers (the item-26 distinction)."""
+    return (
+        _cached_index(spark, sf_dir, MAX_SHINGLE_DF)
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_shingles"))
+        .localCheckpoint(eager=True)
+    )
 
 
-#: default-parameters-only memo of the per-pair shared-shingle COUNTS
-#: over the df-capped index (r14) — the ``_common_counts`` self-join is
-#: the expensive stage shared verbatim by the exact-Jaccard pair build
-#: (feeding _cached_ngram_pairs during warm-up) and the containment
-#: seat, which re-ran the full index self-join per query. Same
-#: multi-consumer contract and default-parameters-only caveat as
-#: _cached_minhash_pairs below. Scale note: this table is the declared
-#: O(Σ df²) exact-baseline candidate volume — memoizing it changes
-#: nothing asymptotically, it just stops computing it twice per session.
-_COMMON_CACHE: dict[tuple[str, str], DataFrame] = {}
-register_cache_clearer(_COMMON_CACHE.clear)
-
-
+@session_memo
 def _cached_common_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    common = _COMMON_CACHE.get(key)
-    if common is None:
-        common = _common_counts(
-            _cached_index(spark, sf_dir, MAX_SHINGLE_DF)
-        ).localCheckpoint(eager=True)
-        _COMMON_CACHE[key] = common
-    return common
+    """Per-pair shared-shingle COUNTS over the df-capped index (r14) —
+    the ``_common_counts`` self-join is the expensive stage shared
+    verbatim by the exact-Jaccard pair build (feeding _cached_ngram_pairs
+    during warm-up) and the containment seat, which re-ran the full index
+    self-join per query. Module defaults only: a parameterized build
+    calls _common_counts directly. Scale note: this table is the
+    declared O(Σ df²) exact-baseline candidate volume — memoizing it
+    changes nothing asymptotically, it just stops computing it twice per
+    session."""
+    return _common_counts(
+        _cached_index(spark, sf_dir, MAX_SHINGLE_DF)
+    ).localCheckpoint(eager=True)
 
 
-#: default-parameters-only memo of the verified ngram-Jaccard pair set
-#: (r14) — two registered consumers (dedup_ngram_jaccard,
-#: media_dedup_agreement's truth side) each re-ran the full band join +
-#: exact-verify pipeline per query; same multi-consumer contract and
-#: default-parameters-only caveat as _cached_minhash_pairs below
-_NGRAM_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-register_cache_clearer(_NGRAM_PAIRS_CACHE.clear)
-
-
+@session_memo
 def _cached_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    pairs = _NGRAM_PAIRS_CACHE.get(key)
-    if pairs is None:
-        pairs = ngram_jaccard_pairs(
-            load_star(spark, sf_dir)["documents"],
-            index=_cached_index(spark, sf_dir, MAX_SHINGLE_DF),
-            common=_cached_common_counts(spark, sf_dir),
-            sizes=_cached_sizes(spark, sf_dir),
-        ).localCheckpoint(eager=True)
-        _NGRAM_PAIRS_CACHE[key] = pairs
-    return pairs
+    """The verified ngram-Jaccard pair set (r14) — two registered
+    consumers (dedup_ngram_jaccard, media_dedup_agreement's truth side)
+    each re-ran the full band join + exact-verify pipeline per query.
+    Module defaults only: a parameterized build calls
+    ngram_jaccard_pairs directly."""
+    return ngram_jaccard_pairs(
+        load_star(spark, sf_dir)["documents"],
+        index=_cached_index(spark, sf_dir, MAX_SHINGLE_DF),
+        common=_cached_common_counts(spark, sf_dir),
+        sizes=_cached_sizes(spark, sf_dir),
+    ).localCheckpoint(eager=True)
 
 
 def build_ngram(spark: SparkSession, sf_dir: str, ctx: RunContext = DEFAULT_CONTEXT) -> DataFrame:
@@ -456,40 +417,25 @@ def build_containment(
     )
 
 
-#: memoized VERIFIED MinHash pair set per (app, sf_dir) — four registered
-#: queries consume the same default-parameter pair set (dedup_minhash_lsh
-#: itself, the fuzzy edit-distance verifier, the connected-component
-#: fixpoint, and method_agreement's MinHash side); the signatures →
-#: banded join → exact-Jaccard verify chain is the expensive stage, so
-#: it runs once per session like the shingle index it builds on
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-register_cache_clearer(_PAIRS_CACHE.clear)
-
-
+@session_memo
 def _cached_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DEFAULT-PARAMETERS-ONLY memo (r9 ADVICE): the key carries no
-    threshold/max_df, so this must never serve a parameterized call —
-    every consumer (build_minhash, fuzzy verify, clusters,
-    method_agreement) uses module defaults, and the dict key would
-    silently alias distinct parameter sets otherwise. A caller needing
-    non-default parameters must call minhash_lsh_pairs directly (or
-    extend the key the way similarity._cached_lloyd does). RunContext
-    is identity-only (job id/clock) and never affects the pair set."""
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    pairs = _PAIRS_CACHE.get(key)
-    if pairs is None:
-        pairs = minhash_lsh_pairs(
-            load_star(spark, sf_dir)["documents"],
-            index=_cached_index(spark, sf_dir, MAX_SHINGLE_DF),
-            sizes=_cached_sizes(spark, sf_dir),
-        ).localCheckpoint(eager=True)
-        _PAIRS_CACHE[key] = pairs
-    return pairs
+    """The VERIFIED MinHash pair set — four registered queries consume it
+    (dedup_minhash_lsh itself, the fuzzy edit-distance verifier, the
+    connected-component fixpoint, and method_agreement's MinHash side);
+    the signatures → banded join → exact-Jaccard verify chain is the
+    expensive stage, so it runs once per session like the shingle index
+    it builds on. Module defaults only: a parameterized build calls
+    minhash_lsh_pairs directly."""
+    return minhash_lsh_pairs(
+        load_star(spark, sf_dir)["documents"],
+        index=_cached_index(spark, sf_dir, MAX_SHINGLE_DF),
+        sizes=_cached_sizes(spark, sf_dir),
+    ).localCheckpoint(eager=True)
 
 
 def build_minhash(spark: SparkSession, sf_dir: str, ctx: RunContext = DEFAULT_CONTEXT) -> DataFrame:
-    # ctx is accepted for registry-signature uniformity only; the memo
-    # below is default-parameters-only (see _cached_minhash_pairs).
+    # ctx is accepted for registry-signature uniformity only; RunContext
+    # is identity-only (job id/clock) and never affects the pair set
     return _cached_minhash_pairs(spark, sf_dir)
 
 
@@ -759,32 +705,22 @@ def dedup_clusters(
     )
 
 
-#: memoized cluster labels per (app, sf_dir) — the iterative fixpoint is
-#: the most expensive dedup stage, and two registered queries consume it
-#: (dedup_clusters, dedup_keep_best); the labels are already
-#: localCheckpointed so reuse costs only the final projection.
-_CLUSTERS_CACHE: dict[tuple[str, str], DataFrame] = {}
-register_cache_clearer(_CLUSTERS_CACHE.clear)
-
-
-def _cached_clusters(
-    spark: SparkSession, sf_dir: str, ctx: RunContext = DEFAULT_CONTEXT
-) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    labels = _CLUSTERS_CACHE.get(key)
-    if labels is None:
-        labels = dedup_clusters(
-            load_star(spark, sf_dir)["documents"], ctx,
-            pairs=_cached_minhash_pairs(spark, sf_dir),
-        )
-        _CLUSTERS_CACHE[key] = labels
-    return labels
+@session_memo
+def _cached_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cluster labels over the MinHash pair graph — the iterative
+    fixpoint is the most expensive dedup stage, and two registered
+    queries consume it (dedup_clusters, dedup_keep_best); the labels are
+    already localCheckpointed so reuse costs only the final projection."""
+    return dedup_clusters(
+        load_star(spark, sf_dir)["documents"],
+        pairs=_cached_minhash_pairs(spark, sf_dir),
+    )
 
 
 def build_clusters(
     spark: SparkSession, sf_dir: str, ctx: RunContext = DEFAULT_CONTEXT
 ) -> DataFrame:
-    return _cached_clusters(spark, sf_dir, ctx)
+    return _cached_clusters(spark, sf_dir)
 
 
 # Recursive-CTE oracle: reachability closure over the undirected edges,
@@ -826,7 +762,7 @@ def dedup_cluster_profile(
     drop rate — the per-snapshot dashboard row a curation pipeline
     watches (a source whose dup_rate jumps is re-crawling itself; one
     whose n_clusters collapses lost its near-dup detector). Consumes the
-    session-memoized cluster labels (_CLUSTERS_CACHE), so the marginal
+    session-memoized cluster labels (_cached_clusters), so the marginal
     cost is one broadcast-sized join + one agg over the corpus.
 
     Row semantics: counts are over document ROWS (duplicate doc_ids each
@@ -856,7 +792,7 @@ def build_cluster_profile(
 ) -> DataFrame:
     return dedup_cluster_profile(
         load_star(spark, sf_dir)["documents"],
-        _cached_clusters(spark, sf_dir, ctx),
+        _cached_clusters(spark, sf_dir),
         ctx,
     )
 
@@ -974,22 +910,14 @@ def simhash_pairs(
     )
 
 
-#: default-parameters-only memo of the SimHash pair set (r14) — two
-#: registered consumers (dedup_simhash, method_agreement's simhash
-#: side); same contract/caveats as _cached_minhash_pairs
-_SIMHASH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-register_cache_clearer(_SIMHASH_PAIRS_CACHE.clear)
-
-
+@session_memo
 def _cached_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    pairs = _SIMHASH_PAIRS_CACHE.get(key)
-    if pairs is None:
-        pairs = simhash_pairs(
-            load_star(spark, sf_dir)["documents"]
-        ).localCheckpoint(eager=True)
-        _SIMHASH_PAIRS_CACHE[key] = pairs
-    return pairs
+    """The SimHash pair set (r14) — two registered consumers
+    (dedup_simhash, method_agreement's simhash side). Module defaults
+    only: a parameterized build calls simhash_pairs directly."""
+    return simhash_pairs(
+        load_star(spark, sf_dir)["documents"]
+    ).localCheckpoint(eager=True)
 
 
 def build_simhash(spark: SparkSession, sf_dir: str, ctx: RunContext = DEFAULT_CONTEXT) -> DataFrame:
@@ -1578,20 +1506,11 @@ GROUP BY doc_id, grp
 """
 
 
-#: per-session memo for the repeated-span set (feeds the registered
-#: detector AND the scrub rewrite below; cleared by clear_operator_memos)
-_SPANS_CACHE: dict[tuple[str, str], DataFrame] = {}
-register_cache_clearer(_SPANS_CACHE.clear)
-
-
+@session_memo
 def _cached_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    sp = _SPANS_CACHE.get(key)
-    if sp is None:
-        docs = load_star(spark, sf_dir)["documents"]
-        sp = register_persist(repeated_spans(docs))
-        _SPANS_CACHE[key] = sp
-    return sp
+    """The repeated-span set; feeds the registered detector AND the scrub
+    rewrite below."""
+    return register_persist(repeated_spans(load_star(spark, sf_dir)["documents"]))
 
 
 def span_scrub(

@@ -26,29 +26,16 @@ iterative-operator discipline mirrors dedup.dedup_clusters.
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from demo_etl_spark.context import DEFAULT_CONTEXT, RunContext
 from demo_etl_spark.io import (
     load_star,
-    register_cache_clearer,
     register_memo_warmer,
     register_persist,
+    session_memo,
 )
-
-#: per-(application, sf_dir) memo of the persisted edge set — the same
-#: amortization the dedup family applies to its shingle index: the
-#: pair-grid explode + distinct is the expensive one-time stage (~4 s
-#: at sf0.1, the whole query ~8 s cold); later calls skip it
-_EDGE_CACHE: dict = {}
-# r12 review: without this clearer, clear_operator_memos() unpersisted
-# the edge frame (it sits in io._PERSISTED) but left the dict entry
-# alive, so every later graph query silently re-derived the edges from
-# the lineitem scan on EACH use instead of rebuilding the persist
-register_cache_clearer(_EDGE_CACHE.clear)
 
 PR_SCALE = 1_000_000  # 1e-6 fixed-point score units
 DAMP_NUM = 850_000  # 0.85 in score units
@@ -165,30 +152,30 @@ def _pagerank_from_edges(edges: DataFrame) -> DataFrame:
     return pr.select("part", "outdeg", F.col("pr").alias("pagerank_e6"))
 
 
+@session_memo
 def _cached_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    pc = _EDGE_CACHE.get(key)
-    if pc is None:
-        # r14: persist the edge set PRE-PARTITIONED on dst (guide-§2.4
-        # "two operations keyed the same way share one exchange"): every
-        # iterative consumer joins a broadcast node table onto the edges
-        # and then aggregates BY dst — label propagation 3×/run,
-        # pagerank's contribution sum 2×/run. A broadcast join preserves
-        # the streamed side's partitioning, so those aggregations now
-        # run exchange-free against the cached layout; the one
-        # dst-shuffle moves into the declared memo build. Consumers
-        # keyed on src (triangles' degree, closure's frontier join)
-        # shuffled before and still do — unchanged.
-        # r15: the persisted frame carries co_orders (one extra long,
-        # same build cost — groupBy replaces distinct), so the memo also
-        # serves part_similarity's pair pipeline; the graph consumers
-        # read it through the _cached_edges projection, whose column
-        # pruning reaches the InMemoryTableScan.
-        pc = register_persist(
-            _pair_counts(load_star(spark, sf_dir)["lineitem"]).repartition("dst")
-        )
-        _EDGE_CACHE[key] = pc
-    return pc
+    """The persisted co-purchase edge set — the same amortization the
+    dedup family applies to its shingle index: the pair-grid explode is
+    the expensive one-time stage (~4 s at sf0.1, the whole query ~8 s
+    cold); later calls skip it."""
+    # r14: persist the edge set PRE-PARTITIONED on dst (guide-§2.4
+    # "two operations keyed the same way share one exchange"): every
+    # iterative consumer joins a broadcast node table onto the edges
+    # and then aggregates BY dst — label propagation 3×/run,
+    # pagerank's contribution sum 2×/run. A broadcast join preserves
+    # the streamed side's partitioning, so those aggregations now
+    # run exchange-free against the cached layout; the one
+    # dst-shuffle moves into the declared memo build. Consumers
+    # keyed on src (triangles' degree, closure's frontier join)
+    # shuffled before and still do — unchanged.
+    # r15: the persisted frame carries co_orders (one extra long,
+    # same build cost — groupBy replaces distinct), so the memo also
+    # serves part_similarity's pair pipeline; the graph consumers
+    # read it through the _cached_edges projection, whose column
+    # pruning reaches the InMemoryTableScan.
+    return register_persist(
+        _pair_counts(load_star(spark, sf_dir)["lineitem"]).repartition("dst")
+    )
 
 
 def _cached_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

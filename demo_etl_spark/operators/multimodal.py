@@ -34,7 +34,6 @@ documents). ``decode_pgm`` itself is byte-correct for any PGM input.
 from __future__ import annotations
 
 import hashlib
-import os as _os
 from collections.abc import Iterator
 
 import numpy as np
@@ -54,8 +53,8 @@ from pyspark.sql.types import (
 from demo_etl_spark.context import DEFAULT_CONTEXT, RunContext
 from demo_etl_spark.io import (
     load_star,
-    register_cache_clearer,
     register_memo_warmer,
+    session_memo,
 )
 
 #: media table schema: opaque payload + typed metadata
@@ -1275,50 +1274,32 @@ def image_band_recall(
     )
 
 
-#: memoized dHash signature frames per (app, sf_dir): the pair query and
-#: the recall audit share the decode+signature stage (the _EMB_PAIRS_CACHE
-#: share-the-expensive-stage pattern)
-_DHASH_CACHE: dict[tuple[str, str], DataFrame] = {}
-register_cache_clearer(_DHASH_CACHE.clear)
-
-
+@session_memo
 def _cached_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    sig = _DHASH_CACHE.get(key)
-    if sig is None:
-        docs = load_star(spark, sf_dir)["documents"]
-        media = synthesize_media(docs).filter(
-            F.col("media_type") == "image"
-        )
-        sig = dhash_signatures(media).localCheckpoint(eager=True)
-        _DHASH_CACHE[key] = sig
-    return sig
+    """dHash signatures of the image media: the pair query and the recall
+    audit share the decode+signature stage (the _cached_emb_pairs
+    share-the-expensive-stage pattern)."""
+    docs = load_star(spark, sf_dir)["documents"]
+    media = synthesize_media(docs).filter(F.col("media_type") == "image")
+    return dhash_signatures(media).localCheckpoint(eager=True)
 
 
-#: memoized PAIR sets per (app, sf_dir, modality): each feeds its own
-#: registered seat plus the cross-modal agreement row (and the image
-#: set also the recall audit's found side) — without the checkpoint the
-#: agreement plan recomputed all three pair pipelines in full (plan
-#: audit: 294 static exchanges)
-_MEDIA_PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-register_cache_clearer(_MEDIA_PAIRS_CACHE.clear)
-
-
+@session_memo
 def _cached_media_pairs(
     spark: SparkSession, sf_dir: str, kind: str
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), kind)
-    pairs = _MEDIA_PAIRS_CACHE.get(key)
-    if pairs is None:
-        if kind == "image":
-            pairs = image_phash_pairs(_cached_dhash(spark, sf_dir))
-        elif kind == "audio":
-            pairs = audio_fingerprint_pairs(_cached_audio_sig(spark, sf_dir))
-        else:
-            pairs = video_chunk_pairs(_cached_video_chunks(spark, sf_dir))
-        pairs = pairs.localCheckpoint(eager=True)
-        _MEDIA_PAIRS_CACHE[key] = pairs
-    return pairs
+    """The PAIR set of one modality: each feeds its own registered seat
+    plus the cross-modal agreement row (and the image set also the recall
+    audit's found side) — without the checkpoint the agreement plan
+    recomputed all three pair pipelines in full (plan audit: 294 static
+    exchanges)."""
+    if kind == "image":
+        pairs = image_phash_pairs(_cached_dhash(spark, sf_dir))
+    elif kind == "audio":
+        pairs = audio_fingerprint_pairs(_cached_audio_sig(spark, sf_dir))
+    else:
+        pairs = video_chunk_pairs(_cached_video_chunks(spark, sf_dir))
+    return pairs.localCheckpoint(eager=True)
 
 
 def build_image_phash(
@@ -1681,21 +1662,11 @@ def audio_fingerprint_pairs(sig: DataFrame) -> DataFrame:
     )
 
 
-_AUDIO_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-register_cache_clearer(_AUDIO_SIG_CACHE.clear)
-
-
+@session_memo
 def _cached_audio_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    sig = _AUDIO_SIG_CACHE.get(key)
-    if sig is None:
-        docs = load_star(spark, sf_dir)["documents"]
-        media = synthesize_media(docs).filter(
-            F.col("media_type") == "audio"
-        )
-        sig = audio_fingerprint_signatures(media).localCheckpoint(eager=True)
-        _AUDIO_SIG_CACHE[key] = sig
-    return sig
+    docs = load_star(spark, sf_dir)["documents"]
+    media = synthesize_media(docs).filter(F.col("media_type") == "audio")
+    return audio_fingerprint_signatures(media).localCheckpoint(eager=True)
 
 
 def build_audio_fingerprint(
@@ -1910,26 +1881,16 @@ def video_chunk_pairs(
     )
 
 
-_VIDEO_CHUNKS_CACHE: dict[tuple[str, str], DataFrame] = {}
-register_cache_clearer(_VIDEO_CHUNKS_CACHE.clear)
-
-
+@session_memo
 def _cached_video_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager checkpoint: the pair query fans the chunk table into ~8
     # consumers (index x/y, chain, intersection a/b, sizes a/b) — left
     # lazy, the static plan recomputed the decode+md5 MapInPandas stage
     # once PER BRANCH (plan audit: 20 Arrow stages / 92 exchanges).
     # Truncating the lineage decodes every payload exactly once.
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    ch = _VIDEO_CHUNKS_CACHE.get(key)
-    if ch is None:
-        docs = load_star(spark, sf_dir)["documents"]
-        media = synthesize_media(docs).filter(
-            F.col("media_type") == "video"
-        )
-        ch = video_chunk_hashes(media).localCheckpoint(eager=True)
-        _VIDEO_CHUNKS_CACHE[key] = ch
-    return ch
+    docs = load_star(spark, sf_dir)["documents"]
+    media = synthesize_media(docs).filter(F.col("media_type") == "video")
+    return video_chunk_hashes(media).localCheckpoint(eager=True)
 
 
 def build_video_chunk_dedup(
@@ -2209,20 +2170,6 @@ register_memo_warmer(_warm_shared_memos)
 # fed a different pair set. Canonical = component min media_id, the
 # deterministic pick both engines agree on. Output mirrors
 # dedup_clusters: one row per image in a non-trivial cluster.
-#: memoized cluster labels over the UNION of the three verified media
-#: pair graphs (r14 optimization): modality classes partition the id
-#: space (media_type = doc_id % 3) and edges never cross modalities, so
-#: ONE pointer-jumping CC pass labels all three families at once — and
-#: its restriction to image-modality ids is bit-identical to a CC pass
-#: over the image pairs alone (disjoint id sets cannot change any
-#: component or its min label). Two registered seats consume it
-#: (dedup_image_clusters, media_dedup_profile); before this memo each
-#: ran its own full iterative fixpoint (measured 3.0 s + 5.8 s at sf0.1
-#: — the two slowest media seats in the r14 baseline bench).
-_MEDIA_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-register_cache_clearer(_MEDIA_LABELS_CACHE.clear)
-
-
 def _media_union_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected dedup edges across all three modalities, each family
     filtered by its own keep criterion (image: grid verify; audio: all
@@ -2251,17 +2198,23 @@ def _media_union_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo
 def _cached_media_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    labels = _MEDIA_LABELS_CACHE.get(key)
-    if labels is None:
-        from demo_etl_spark.operators.dedup import dedup_clusters
+    """Cluster labels over the UNION of the three verified media pair
+    graphs (r14 optimization): modality classes partition the id space
+    (media_type = doc_id % 3) and edges never cross modalities, so ONE
+    pointer-jumping CC pass labels all three families at once — and its
+    restriction to image-modality ids is bit-identical to a CC pass over
+    the image pairs alone (disjoint id sets cannot change any component
+    or its min label). Two registered seats consume it
+    (dedup_image_clusters, media_dedup_profile); before this memo each
+    ran its own full iterative fixpoint (measured 3.0 s + 5.8 s at sf0.1
+    — the two slowest media seats in the r14 baseline bench)."""
+    from demo_etl_spark.operators.dedup import dedup_clusters
 
-        labels = dedup_clusters(
-            None, DEFAULT_CONTEXT, pairs=_media_union_pairs(spark, sf_dir)
-        )
-        _MEDIA_LABELS_CACHE[key] = labels
-    return labels
+    return dedup_clusters(
+        None, DEFAULT_CONTEXT, pairs=_media_union_pairs(spark, sf_dir)
+    )
 
 
 def build_image_dedup_clusters(

@@ -24,17 +24,9 @@ from demo_etl_spark.functions.fixedpoint import round_div, round_div_expr
 from demo_etl_spark.functions.scalars import money_fixed
 from demo_etl_spark.io import (
     load_star,
-    register_cache_clearer,
     register_memo_warmer,
+    session_memo,
 )
-
-#: per-(application, sf_dir) memo of the materialized product aggregate —
-#: product_analytics, product_ranking and sales_asset_union's product
-#: branch each re-ran the lineitem⋈orders⋈part join + per-part aggregate;
-#: the result is part-grain (~|parts| rows), so one eager localCheckpoint
-#: replaces 3 fact passes per session with 1 (r14 verdict items 2-3).
-_PRODUCT_AGG_CACHE: dict = {}
-register_cache_clearer(_PRODUCT_AGG_CACHE.clear)
 
 # DuckDB twin of _product_agg (fixed-point longs kept for exact rounding).
 _AGG_SQL = """
@@ -77,21 +69,19 @@ def _product_agg(
     )
 
 
+@session_memo
 def _cached_product_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized eager checkpoint of ``_product_agg`` over the star
-    tables. Consumers select subsets of its columns — identical results to
-    their former pruned inline builds, one build per session."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    df = _PRODUCT_AGG_CACHE.get(key)
-    if df is None:
-        t = load_star(spark, sf_dir)
-        df = _product_agg(t["lineitem"], t["orders"], t["part"]).localCheckpoint(
-            eager=True
-        )
-        _PRODUCT_AGG_CACHE[key] = df
-    return df
+    """Eager checkpoint of ``_product_agg`` over the star tables.
+    product_analytics, product_ranking and sales_asset_union's product
+    branch each re-ran the lineitem⋈orders⋈part join + per-part
+    aggregate; the result is part-grain (~|parts| rows), so one build
+    replaces 3 fact passes per session with 1 (r14 verdict items 2-3).
+    Consumers select subsets of its columns — identical results to their
+    former pruned inline builds."""
+    t = load_star(spark, sf_dir)
+    return _product_agg(t["lineitem"], t["orders"], t["part"]).localCheckpoint(
+        eager=True
+    )
 
 
 def _warm_shared_memos(spark: SparkSession, sf_dir: str) -> None:

@@ -37,8 +37,6 @@ window-over-partition + filter plan does here.
 
 from __future__ import annotations
 
-import os as _os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -47,8 +45,8 @@ from pyspark.sql import functions as F
 from demo_etl_spark.context import DEFAULT_CONTEXT, RunContext
 from demo_etl_spark.io import (
     load_star,
-    register_cache_clearer,
     register_memo_warmer,
+    session_memo,
 )
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -355,38 +353,30 @@ def lsh_bucket_topk(
     )
 
 
-#: memoized top-k result frames per (application, sf_dir, kind) — every
-#: recall audit joins the SAME top-k set its standalone seat computes
-#: (exact brute-force baseline, LSH, trained IVF, PQ-ADC), so one
-#: localCheckpoint serves both consumers. Same share-the-expensive-stage
-#: pattern as _EMB_PAIRS_CACHE; results are tiny (n_queries × k rows).
-_TOPK_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-register_cache_clearer(_TOPK_CACHE.clear)
-
-
+@session_memo
 def _cached_topk(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), kind)
-    df = _TOPK_CACHE.get(key)
-    if df is None:
-        from demo_etl_spark.io import read_star_table
+    """Top-k result frame of one search ``kind`` — every recall audit
+    joins the SAME top-k set its standalone seat computes (exact
+    brute-force baseline, LSH, trained IVF, PQ-ADC), so one
+    localCheckpoint serves both consumers. Same share-the-expensive-stage
+    pattern as _cached_emb_pairs; results are tiny (n_queries × k rows)."""
+    from demo_etl_spark.io import read_star_table
 
-        raw = lambda: load_star(spark, sf_dir)["embeddings"]  # noqa: E731
-        valid = lambda: valid_embeddings(  # noqa: E731
-            read_star_table(spark, sf_dir, "embeddings")
-        )
-        make = {
-            # populations mirror each standalone builder exactly
-            "cos_raw": lambda: cosine_topk(raw()),
-            "lsh_raw": lambda: lsh_bucket_topk(raw()),
-            "cos_valid": lambda: cosine_topk(valid()),
-            "ivf_valid": lambda: ivf_topk(
-                valid(), cent=_cached_lloyd(spark, sf_dir)
-            ),
-            "pq_valid": lambda: pq_topk(valid()),
-        }[kind]
-        df = make().localCheckpoint(eager=True)
-        _TOPK_CACHE[key] = df
-    return df
+    raw = lambda: load_star(spark, sf_dir)["embeddings"]  # noqa: E731
+    valid = lambda: valid_embeddings(  # noqa: E731
+        read_star_table(spark, sf_dir, "embeddings")
+    )
+    make = {
+        # populations mirror each standalone builder exactly
+        "cos_raw": lambda: cosine_topk(raw()),
+        "lsh_raw": lambda: lsh_bucket_topk(raw()),
+        "cos_valid": lambda: cosine_topk(valid()),
+        "ivf_valid": lambda: ivf_topk(
+            valid(), cent=_cached_lloyd(spark, sf_dir)
+        ),
+        "pq_valid": lambda: pq_topk(valid()),
+    }[kind]
+    return make().localCheckpoint(eager=True)
 
 
 def build_topk(spark: SparkSession, sf_dir: str, ctx: RunContext = DEFAULT_CONTEXT) -> DataFrame:
@@ -586,34 +576,18 @@ def _emb6(embeddings: DataFrame) -> DataFrame:
     )
 
 
-#: per-(application, sf_dir, stride, iters) memo of the TRAINED centroid
-#: table (tiny: ≤ n/stride rows) — IVF search and semantic dedup share
-#: ONE Lloyd training per session, the same amortization the graph
-#: family applies to its co-purchase edge set (_EDGE_CACHE)
-_CENT_CACHE: dict = {}
-register_cache_clearer(_CENT_CACHE.clear)
-
-
+@session_memo
 def _cached_lloyd(
     spark: SparkSession,
     sf_dir: str,
     stride: int = CENTROID_STRIDE,
     iters: int = IVF_LLOYD_ITERS,
 ) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        stride,
-        iters,
-    )
-    cent = _CENT_CACHE.get(key)
-    if cent is None:
-        emb6 = _emb6(valid_embeddings(load_star(spark, sf_dir)["embeddings"]))
-        cent = _lloyd_centroids(emb6, stride, iters).localCheckpoint(
-            eager=True
-        )
-        _CENT_CACHE[key] = cent
-    return cent
+    """The TRAINED centroid table (tiny: ≤ n/stride rows) — IVF search and
+    semantic dedup share ONE Lloyd training per session, the same
+    amortization the graph family applies to its co-purchase edge set."""
+    emb6 = _emb6(valid_embeddings(load_star(spark, sf_dir)["embeddings"]))
+    return _lloyd_centroids(emb6, stride, iters).localCheckpoint(eager=True)
 
 
 def ivf_topk(
@@ -1092,32 +1066,22 @@ def embedding_near_dup_bruteforce(
     )
 
 
-#: memoized embedding near-dup pair sets per (app, sf_dir, kind) — the
-#: exact blocked kernel and the banded-LSH path each feed two registered
-#: queries (their own seat + the recall audit that joins them), the same
-#: share-the-expensive-stage pattern as dedup's _PAIRS_CACHE
-_EMB_PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-register_cache_clearer(_EMB_PAIRS_CACHE.clear)
-
-
+@session_memo
 def _cached_emb_pairs(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), kind)
-    pairs = _EMB_PAIRS_CACHE.get(key)
-    if pairs is None:
-        emb = load_star(spark, sf_dir)["embeddings"]
-        if kind == "exact":
-            pairs = embedding_near_dup(emb)
-        else:
-            # r14: the banded build consumes the shared signature memo —
-            # the same (vec_id, band, sig) frame the incremental seat
-            # needs, so the posexplode→join→agg signature pipeline runs
-            # once per session instead of once per consumer
-            pairs = embedding_ann_pairs(
-                emb, sigs=_cached_band_sigs(spark, sf_dir)
-            )
-        pairs = pairs.localCheckpoint(eager=True)
-        _EMB_PAIRS_CACHE[key] = pairs
-    return pairs
+    """Embedding near-dup pair set of one ``kind`` — the exact blocked
+    kernel and the banded-LSH path each feed two registered queries
+    (their own seat + the recall audit that joins them), the same
+    share-the-expensive-stage pattern as dedup's _cached_minhash_pairs."""
+    emb = load_star(spark, sf_dir)["embeddings"]
+    if kind == "exact":
+        pairs = embedding_near_dup(emb)
+    else:
+        # r14: the banded build consumes the shared signature memo —
+        # the same (vec_id, band, sig) frame the incremental seat
+        # needs, so the posexplode→join→agg signature pipeline runs
+        # once per session instead of once per consumer
+        pairs = embedding_ann_pairs(emb, sigs=_cached_band_sigs(spark, sf_dir))
+    return pairs.localCheckpoint(eager=True)
 
 
 def build_near_dup(spark: SparkSession, sf_dir: str, ctx: RunContext = DEFAULT_CONTEXT) -> DataFrame:
@@ -1185,29 +1149,21 @@ def _band_signatures(
     )
 
 
-#: memoized (vec_id, band, sig) hyperplane-LSH signatures at the DEFAULT
-#: (ANN_BANDS, ANN_BAND_PLANES) dial, per (app, sf_dir). Two registered
-#: consumers compute this identical frame: the banded ann-pair memo
-#: build (feeding dedup_embedding_ann + dedup_ann_pair_recall) and
-#: dedup_embedding_incremental's cross-boundary candidate stage — the
-#: signature pipeline (posexplode of N×dims rows → broadcast weights
-#: join → ppb-way partial agg) is the expensive stage of both, and it
-#: appeared TWICE in each consumer's static plan (both join sides
-#: reference it). One eager localCheckpoint serves all four references.
-_BAND_SIGS_CACHE: dict[tuple[str, str], DataFrame] = {}
-register_cache_clearer(_BAND_SIGS_CACHE.clear)
-
-
+@session_memo
 def _cached_band_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    sigs = _BAND_SIGS_CACHE.get(key)
-    if sigs is None:
-        emb = _e6_frame(load_star(spark, sf_dir)["embeddings"])
-        sigs = _band_signatures(
-            emb.select("vec_id", "embedding"), ANN_BANDS, ANN_BAND_PLANES
-        ).localCheckpoint(eager=True)
-        _BAND_SIGS_CACHE[key] = sigs
-    return sigs
+    """(vec_id, band, sig) hyperplane-LSH signatures at the DEFAULT
+    (ANN_BANDS, ANN_BAND_PLANES) dial. Two registered consumers compute
+    this identical frame: the banded ann-pair memo build (feeding
+    dedup_embedding_ann + dedup_ann_pair_recall) and
+    dedup_embedding_incremental's cross-boundary candidate stage — the
+    signature pipeline (posexplode of N×dims rows → broadcast weights
+    join → ppb-way partial agg) is the expensive stage of both, and it
+    appeared TWICE in each consumer's static plan (both join sides
+    reference it). One eager localCheckpoint serves all four references."""
+    emb = _e6_frame(load_star(spark, sf_dir)["embeddings"])
+    return _band_signatures(
+        emb.select("vec_id", "embedding"), ANN_BANDS, ANN_BAND_PLANES
+    ).localCheckpoint(eager=True)
 
 
 def embedding_ann_pairs(
@@ -1384,7 +1340,7 @@ def build_ann_pair_recall(
     # eager localCheckpoint that underuses the executor on its own —
     # submit both jobs concurrently (standard Spark multi-thread job
     # submission; the fair scheduler interleaves their stages). The two
-    # _EMB_PAIRS_CACHE keys differ, but both threads reach the SHARED
+    # _cached_emb_pairs keys differ, but both threads reach the SHARED
     # unlocked check-then-set memos underneath (_SCAN_CACHE via
     # load_star, _DIMS_CACHE via _emb_dims) — so warm those on the
     # calling thread FIRST; a lost race there would only duplicate scan
@@ -2632,22 +2588,13 @@ def bm25_scores(
 #: the point of scoring the candidate stage properly.
 BM25_PRUNE_M = 128
 
-#: memoized BM25 top-M per (app, sf_dir): ONE ranking frame feeds the
-#: standalone top-k seat (rank <= TOP_K head), the lexical recall audit,
-#: and the hybrid rerank's candidate stage (the _cached_topk
-#: share-the-stage pattern)
-_BM25_CACHE: dict[tuple[str, str], DataFrame] = {}
-register_cache_clearer(_BM25_CACHE.clear)
-
-
+@session_memo
 def _cached_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    out = _BM25_CACHE.get(key)
-    if out is None:
-        docs = load_star(spark, sf_dir)["documents"]
-        out = bm25_scores(docs, k=BM25_PRUNE_M).localCheckpoint(eager=True)
-        _BM25_CACHE[key] = out
-    return out
+    """BM25 top-M: ONE ranking frame feeds the standalone top-k seat
+    (rank <= TOP_K head), the lexical recall audit, and the hybrid
+    rerank's candidate stage (the _cached_topk share-the-stage pattern)."""
+    docs = load_star(spark, sf_dir)["documents"]
+    return bm25_scores(docs, k=BM25_PRUNE_M).localCheckpoint(eager=True)
 
 
 def build_bm25(

@@ -45,20 +45,9 @@ from demo_etl_spark.io import (
     ORDERS_CLEAN_SQL,
     keyed_orders,
     load_star,
-    register_cache_clearer,
     register_memo_warmer,
+    session_memo,
 )
-
-#: per-(application, sf_dir) memo of the materialized daily aggregate —
-#: the multi-consumer amortization the dedup/graph families already use:
-#: FOUR registered queries (time_analytics, revenue_trend, date_dim_join,
-#: revenue_cusum) plus sales_asset_union's time branch each re-ran the
-#: full lineitem⋈orders join + date-grain aggregation; the frame itself
-#: is date-grain (~|distinct ship dates| rows — thousands at any corpus
-#: size), so one eager localCheckpoint replaces 5 fact passes per session
-#: with 1 (r14 verdict items 2-3).
-_DAILY_AGG_CACHE: dict = {}
-register_cache_clearer(_DAILY_AGG_CACHE.clear)
 
 # DuckDB twin of the per-date aggregate core.
 _DAILY_SQL = """
@@ -113,19 +102,18 @@ def _daily_agg(
     )
 
 
+@session_memo
 def _cached_daily_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized eager checkpoint of the default (exact-distinct)
-    ``_daily_agg``. Consumers select subsets of its columns — identical
-    results to their former pruned inline builds, one build per session."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    df = _DAILY_AGG_CACHE.get(key)
-    if df is None:
-        t = load_star(spark, sf_dir)
-        df = _daily_agg(t["lineitem"], t["orders"]).localCheckpoint(eager=True)
-        _DAILY_AGG_CACHE[key] = df
-    return df
+    """Eager checkpoint of the default (exact-distinct) ``_daily_agg``.
+    FOUR registered queries (time_analytics, revenue_trend, date_dim_join,
+    revenue_cusum) plus sales_asset_union's time branch each re-ran the
+    full lineitem⋈orders join + date-grain aggregation; the frame is
+    date-grain (~|distinct ship dates| rows), so one build replaces 5
+    fact passes per session with 1 (r14 verdict items 2-3). Consumers
+    select subsets of its columns — identical results to their former
+    pruned inline builds."""
+    t = load_star(spark, sf_dir)
+    return _daily_agg(t["lineitem"], t["orders"]).localCheckpoint(eager=True)
 
 
 def _warm_shared_memos(spark: SparkSession, sf_dir: str) -> None:

@@ -38,16 +38,14 @@ dot diverges on carriage returns (pinned by the oracle-fuzz corpus).
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from demo_etl_spark.context import DEFAULT_CONTEXT, RunContext
 from demo_etl_spark.io import (
     load_star,
-    register_cache_clearer,
     register_memo_warmer,
+    session_memo,
 )
 
 #: merge rounds for the registered query (a production vocab uses tens of
@@ -118,30 +116,18 @@ def _train(documents: DataFrame, rounds: int):
     return sym, merges
 
 
-#: per-(application, sf_dir, rounds) memo of the FULL-CORPUS trained
-#: (symbol table, merge list) — the same multi-consumer amortization as
-#: dedup's shingle index: three registered seats (bpe_merges,
-#: bpe_encode, bpe_roundtrip) consume the identical default-parameter
-#: training, and each re-ran the whole merge loop (rounds × vocab pass
-#: + driver argmax) per query without it (r14). bpe_vocab_coverage
-#: trains on the even-doc_id HALF — a different input — and stays
-#: un-memoized (single consumer). The symbol table inside is already
-#: localCheckpoint-ed per round by _train.
-_TRAIN_CACHE: dict = {}
-register_cache_clearer(_TRAIN_CACHE.clear)
-
-
+@session_memo
 def _cached_train(spark: SparkSession, sf_dir: str, rounds: int = BPE_ROUNDS):
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        rounds,
-    )
-    res = _TRAIN_CACHE.get(key)
-    if res is None:
-        res = _train(load_star(spark, sf_dir)["documents"], rounds)
-        _TRAIN_CACHE[key] = res
-    return res
+    """The FULL-CORPUS trained (symbol table, merge list) — the same
+    multi-consumer amortization as dedup's shingle index: three
+    registered seats (bpe_merges, bpe_encode, bpe_roundtrip) consume the
+    identical default-parameter training, and each re-ran the whole merge
+    loop (rounds × vocab pass + driver argmax) per query without it
+    (r14). bpe_vocab_coverage trains on the even-doc_id HALF — a
+    different input — and stays un-memoized (single consumer). The
+    symbol table inside is already localCheckpoint-ed per round by
+    _train."""
+    return _train(load_star(spark, sf_dir)["documents"], rounds)
 
 
 def _warm_shared_memos(spark: SparkSession, sf_dir: str) -> None:
@@ -192,12 +178,12 @@ def _bpe_oracle(
     rounds: int = BPE_ROUNDS, src: str = "documents", head_only: bool = False
 ) -> str:
     parts = [
-        f"""WITH w AS (
+        f"""WITH w AS MATERIALIZED (
   SELECT u.t AS word, COUNT(*) AS freq
   FROM {src}, unnest(string_split(text, ' ')) AS u(t)
   GROUP BY 1
 ),
-s0 AS (
+s0 AS MATERIALIZED (
   SELECT word, freq,
          regexp_replace(word, '([\\s\\S])', ' \\1 ', 'g') AS sym
   FROM w
@@ -212,12 +198,12 @@ p{r} AS (
   FROM (SELECT string_split(trim(sym), '  ') AS ts, freq FROM {prev}),
        unnest(generate_series(2, len(ts))) AS g(i)
 ),
-b{r} AS (
+b{r} AS MATERIALIZED (
   SELECT lhs, rhs, CAST(SUM(freq) AS BIGINT) AS pair_count
   FROM p{r} GROUP BY lhs, rhs
   ORDER BY pair_count DESC, lhs, rhs LIMIT 1
 ),
-s{r} AS (
+s{r} AS MATERIALIZED (
   -- COALESCE is the merges-exhausted fixpoint (r10 review): when b{r}
   -- is EMPTY its scalar subqueries are NULL and replace(sym, NULL,
   -- NULL) would NULL every symbol table — while the Spark trainer just
@@ -653,12 +639,12 @@ def _bpe_batched_oracle(rounds: int = BATCHED_ROUNDS, m: int = M_BATCH) -> str:
     to three spaces — impossible under the fencing invariant (runs of
     at most two spaces), i.e. a no-op."""
     parts = [
-        """WITH w AS (
+        """WITH w AS MATERIALIZED (
   SELECT u.t AS word, COUNT(*) AS freq
   FROM documents, unnest(string_split(text, ' ')) AS u(t)
   GROUP BY 1
 ),
-s0 AS (
+s0 AS MATERIALIZED (
   SELECT word, freq,
          regexp_replace(word, '([\\s\\S])', ' \\1 ', 'g') AS sym
   FROM w
@@ -669,7 +655,7 @@ s0 AS (
         prev = f"s{r - 1}"
         parts.append(
             f""",
-p{r} AS (
+p{r} AS MATERIALIZED (
   SELECT lhs, rhs, CAST(SUM(freq) AS BIGINT) AS pair_count
   FROM (
     SELECT ts[g.i - 1] AS lhs, ts[g.i] AS rhs, freq
@@ -692,7 +678,7 @@ p{r} AS (
                 cond = ""
             parts.append(
                 f""",
-{name} AS (
+{name} AS MATERIALIZED (
   SELECT lhs, rhs, pair_count FROM p{r} {cond}
   ORDER BY pair_count DESC, lhs, rhs LIMIT 1
 )"""
@@ -708,7 +694,7 @@ p{r} AS (
             repl = f"replace({repl}, {pat}, {rep})"
         parts.append(
             f""",
-s{r} AS (
+s{r} AS MATERIALIZED (
   SELECT word, freq, {repl} AS sym FROM {prev}
 )"""
         )

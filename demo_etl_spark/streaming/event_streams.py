@@ -26,27 +26,19 @@ from pyspark.sql import functions as F
 
 from demo_etl_spark.functions.fixedpoint import round_div
 from demo_etl_spark.functions.scalars import money_fixed
-from demo_etl_spark.io import register_cache_clearer
+from demo_etl_spark.io import session_memo
 from demo_etl_spark.schemas import EVENTS
 
 WATERMARK = "2 hours"
 SESSION_GAP = "30 minutes"
 
-#: per-(application, file) memo of the footer schema probe — every drain
-#: builder ran its own batch read just to learn the stream schema (a
-#: ~0.2-0.6 s driver job × 7 streaming seats per pass); the footer is
-#: immutable for a given file path within a session. Metadata-only (the
-#: same class as io's scan cache), cleared with the operator memos.
-_SCHEMA_MEMO: dict = {}
-register_cache_clearer(_SCHEMA_MEMO.clear)
-
-
+@session_memo
 def _probed_schema(spark: SparkSession, path: str):
-    key = (spark.sparkContext.applicationId, os.path.realpath(path))
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
-        schema = _SCHEMA_MEMO[key] = spark.read.parquet(path).schema
-    return schema
+    """The footer schema of one parquet file. Every drain builder ran its
+    own batch read just to learn the stream schema (a ~0.2-0.6 s driver
+    job × 7 streaming seats per pass); the footer is immutable for a
+    given file path within a session."""
+    return spark.read.parquet(path).schema
 
 
 def read_events_stream(

@@ -315,7 +315,7 @@ def test_unicode_cross_engine_parity_fingerprints_and_stats(spark):
     ascii() — both engines return the first codepoint). The shipped
     testdata is ASCII, so this is the only place unicode parity is
     exercised."""
-    import duckdb
+    from tools import oracle_db
     import pandas as pd
 
     from demo_etl_spark.operators.fingerprint import (
@@ -336,7 +336,7 @@ def test_unicode_cross_engine_parity_fingerprints_and_stats(spark):
         rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
     )
     docs = spark.createDataFrame(pdf)
-    con = duckdb.connect()
+    con = oracle_db.connect()
     con.register("documents", pdf)
 
     for sdf, sql in (
@@ -543,7 +543,7 @@ def test_part_closure_cyclic_bfs_min_dist(spark):
     The back-edges to 97 must not relabel it, and the Spark result
     must equal the DuckDB UNION-distinct recursive-CTE oracle on the
     same lineitem rows."""
-    import duckdb
+    from tools import oracle_db
     from pyspark.sql import Row as R
     from demo_etl_spark.io import register_persist
     from demo_etl_spark.operators.graph import (
@@ -563,7 +563,7 @@ def test_part_closure_cyclic_bfs_min_dist(spark):
     }
     assert got == {(97, 0), (5, 1), (7, 1), (6, 2), (8, 2), (9, 3)}
 
-    con = duckdb.connect()
+    con = oracle_db.connect()
     con.execute("CREATE TABLE lineitem (l_orderkey BIGINT, l_partkey BIGINT)")
     con.executemany("INSERT INTO lineitem VALUES (?, ?)", rows)
     exp = {tuple(r) for r in con.sql(ORACLE_SQL_CLOSURE).fetchall()}
@@ -577,7 +577,7 @@ def test_semantic_dedup_within_cluster_keep_min(spark):
     duplicate 0 (cos 1.0 / ~0.995), 5 duplicates 4; 2 (cos 0.8), 3 and
     6 (cos 0.6) stay. Keep-the-minimum: the smaller vec_id survives.
     The Spark result must equal the parameter-matched DuckDB oracle."""
-    import duckdb
+    from tools import oracle_db
 
     from demo_etl_spark.operators.similarity import (
         _semantic_dedup_oracle,
@@ -605,7 +605,7 @@ def test_semantic_dedup_within_cluster_keep_min(spark):
     assert kept == {0, 2, 3, 4, 6}
     assert {v for v, _, k in got if not k} == {1, 5, 7}
 
-    con = duckdb.connect()
+    con = oracle_db.connect()
     con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
     con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
     exp = {

@@ -72,9 +72,9 @@ def test_ntile_sql_duckdb_dialect_matches_native(spark):
     """The duckdb dialect of the same formula equals DuckDB's native
     ntile — so an operator can decompose Spark-side while its oracle
     keeps native ntile."""
-    import duckdb
+    from tools import oracle_db
 
-    con = duckdb.connect()
+    con = oracle_db.connect()
     for n, b in ((503, 5), (4, 5), (50, 7)):
         con.execute("DROP TABLE IF EXISTS t")
         con.execute(

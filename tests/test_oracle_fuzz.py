@@ -19,8 +19,9 @@ import shutil
 import subprocess
 import sys
 
-import duckdb
 import pytest
+
+from tools import oracle_db
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -105,7 +106,7 @@ def fuzz_dir(tmp_path_factory):
     d = str(tmp_path_factory.mktemp("fuzz_sf"))
     for f in glob.glob(f"{SF}/*.parquet"):
         shutil.copy(f, os.path.join(d, os.path.basename(f)))
-    con = duckdb.connect()
+    con = oracle_db.connect()
     con.execute(
         "CREATE TABLE d (doc_id BIGINT, text VARCHAR, lang VARCHAR, "
         "source VARCHAR, n_chars BIGINT)"
@@ -322,7 +323,7 @@ def test_chained_dup_corpus_converges_fast(spark):
     assert all(c == 1000 for (_, c, _) in chain), "chain did not collapse"
     assert not any(r[0] >= 2000 for r in got), "singletons leaked"
 
-    con = duckdb.connect()
+    con = oracle_db.connect()
     con.execute(
         "CREATE TABLE documents (doc_id BIGINT, text VARCHAR, "
         "lang VARCHAR, source VARCHAR, n_chars BIGINT)"
@@ -376,7 +377,7 @@ def packing_fuzz_dir(tmp_path_factory):
     d = str(tmp_path_factory.mktemp("fuzz_pack_sf"))
     for f in glob.glob(f"{SF}/*.parquet"):
         shutil.copy(f, os.path.join(d, os.path.basename(f)))
-    con = duckdb.connect()
+    con = oracle_db.connect()
     con.execute(
         "CREATE TABLE d (doc_id BIGINT, text VARCHAR, lang VARCHAR, "
         "source VARCHAR, n_chars BIGINT)"
@@ -428,7 +429,7 @@ def nodup_fuzz_dir(tmp_path_factory):
         "submarine ballast periscope sonar torpedo hull conning depth",
     ]
     rows = [(i, t, "en", f"s{i % 2}", len(t)) for i, t in enumerate(topics)]
-    con = duckdb.connect()
+    con = oracle_db.connect()
     con.execute(
         "CREATE TABLE d (doc_id BIGINT, text VARCHAR, lang VARCHAR, "
         "source VARCHAR, n_chars BIGINT)"
@@ -486,7 +487,7 @@ def emb_fuzz_dir(tmp_path_factory):
     d = str(tmp_path_factory.mktemp("fuzz_emb_sf"))
     for f in glob.glob(f"{SF}/*.parquet"):
         shutil.copy(f, os.path.join(d, os.path.basename(f)))
-    con = duckdb.connect()
+    con = oracle_db.connect()
     con.execute(
         "CREATE TABLE e (vec_id BIGINT, embedding FLOAT[], label INTEGER)"
     )
@@ -567,7 +568,7 @@ def events_fuzz_dir(tmp_path_factory):
     d = str(tmp_path_factory.mktemp("fuzz_ev_sf"))
     for f in glob.glob(f"{SF}/*.parquet"):
         shutil.copy(f, os.path.join(d, os.path.basename(f)))
-    con = duckdb.connect()
+    con = oracle_db.connect()
     con.execute(
         "CREATE TABLE ev (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
         "event_type VARCHAR, value DOUBLE, props VARCHAR)"
@@ -621,7 +622,7 @@ def star_fuzz_dir(tmp_path_factory):
     d = str(tmp_path_factory.mktemp("fuzz_star_sf"))
     for f in glob.glob(f"{SF}/*.parquet"):
         shutil.copy(f, os.path.join(d, os.path.basename(f)))
-    con = duckdb.connect()
+    con = oracle_db.connect()
     con.execute(f"""
 COPY (
   WITH kept AS (
@@ -719,7 +720,7 @@ def test_json_extractor_parity_fuzz(spark):
     )
     got = {r["rid"]: (r["g"], r["v"]) for r in sdf.collect()}
 
-    con = duckdb.connect()
+    con = oracle_db.connect()
     con.execute("CREATE TABLE t (rid INTEGER, props VARCHAR)")
     con.executemany("INSERT INTO t VALUES (?, ?)", rows)
     exp = {

@@ -343,9 +343,9 @@ def test_doc_id_unique_per_source_canary():
     hash-red into a named diagnosis. DuckDB-only: cheap, no Spark."""
     import os
 
-    import duckdb
+    from tools import oracle_db
 
-    con = duckdb.connect()
+    con = oracle_db.connect()
     for sf in ("0.001", "0.01", "0.1"):
         path = f"/root/testdata/sf{sf}/documents.parquet"
         if not os.path.exists(path):

@@ -104,14 +104,14 @@ def test_no_fetch_fragile_oracle_types():
     import os
     import sys
 
-    import duckdb
+    from tools import oracle_db
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, os.path.join(repo, "tools"))
     from verify_oracle import _FETCH_FRAGILE
 
     sf = "/root/testdata/sf0.001"
-    con = duckdb.connect()
+    con = oracle_db.connect()
     for t in ("region nation customer supplier part orders lineitem "
               "events documents embeddings").split():
         con.execute(
@@ -132,12 +132,11 @@ def test_no_fetch_fragile_oracle_types():
 
 
 def test_memo_warmers_cover_every_shared_cache(spark):
-    """The bench accounting contract (r12): every module-level memo dict
-    that registers a cache CLEARER and is consumed by more than one
-    registered query must also register a WARMER, and one
-    warm→clear→warm cycle must leave every warmed cache populated then
-    empty then populated — otherwise bench per-query numbers silently
-    re-absorb shared builds after a clear."""
+    """The bench accounting contract (r12): every session memo consumed
+    by more than one registered query must also register a WARMER, and
+    one warm→clear→warm cycle must leave every warmed memo store
+    populated then empty then populated — otherwise bench per-query
+    numbers silently re-absorb shared builds after a clear."""
     from demo_etl_spark import io as io_mod
     from demo_etl_spark.operators import dedup, graph, multimodal, similarity
 
@@ -145,19 +144,50 @@ def test_memo_warmers_cover_every_shared_cache(spark):
     assert len(io_mod._MEMO_WARMERS) >= 4  # dedup, graph, similarity, multimodal
     io_mod.warm_operator_memos(spark, sf)
     shared_caches = [
-        dedup._INDEX_CACHE, dedup._PAIRS_CACHE, dedup._CLUSTERS_CACHE,
-        dedup._SPANS_CACHE, graph._EDGE_CACHE, similarity._CENT_CACHE,
-        similarity._TOPK_CACHE, similarity._EMB_PAIRS_CACHE,
-        multimodal._DHASH_CACHE, multimodal._AUDIO_SIG_CACHE,
-        multimodal._VIDEO_CHUNKS_CACHE, multimodal._MEDIA_PAIRS_CACHE,
+        m.store for m in (
+            dedup._cached_index, dedup._cached_minhash_pairs,
+            dedup._cached_clusters, dedup._cached_repeated_spans,
+            graph._cached_pair_counts, similarity._cached_lloyd,
+            similarity._cached_topk, similarity._cached_emb_pairs,
+            multimodal._cached_dhash, multimodal._cached_audio_sig,
+            multimodal._cached_video_chunks, multimodal._cached_media_pairs,
+        )
     ]
     for c in shared_caches:
         assert c, "warmer left a shared cache empty"
     io_mod.clear_operator_memos()
     for c in shared_caches:
-        # the r12 graph._EDGE_CACHE bug class: a cleared persist whose
+        # the r12 graph edge-memo bug class: a cleared persist whose
         # dict entry survives serves an unpersisted frame forever
         assert not c, "clear_operator_memos left a shared cache populated"
     io_mod.warm_operator_memos(spark, sf)
     for c in shared_caches:
         assert c, "re-warm after clear left a shared cache empty"
+
+
+def _memo_checkpoint_rdds(io_mod) -> set[int]:
+    """Ids of the localCheckpoint RDDs the session memos hold."""
+    from pyspark.sql import DataFrame
+
+    ids = set()
+    for store in io_mod._MEMO_STORES:
+        for value in store.values():
+            for df in value if isinstance(value, tuple) else (value,):
+                if isinstance(df, DataFrame):
+                    plan = df._jdf.queryExecution().analyzed()
+                    if plan.getClass().getSimpleName() == "LogicalRDD":
+                        ids.add(plan.rdd().id())
+    return ids
+
+
+def test_clear_operator_memos_releases_memo_checkpoints(spark, sf_dir):
+    """Clearing the memos frees their localCheckpoint blocks at once;
+    dropping the references alone left them cached until a JVM GC."""
+    from demo_etl_spark import io as io_mod
+
+    io_mod.warm_operator_memos(spark, sf_dir)
+    held = _memo_checkpoint_rdds(io_mod)
+    assert held, "warmed memos hold no checkpoint"
+    io_mod.clear_operator_memos()
+    cached = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+    assert not held & cached, sorted(held & cached)

@@ -204,11 +204,13 @@ def test_round_div_matches_decimal_half_up_in_both_dialects(spark):
     and asserted tier 2 unconditionally."""
     import decimal
 
-    import duckdb
     import pytest
     from hypothesis import given, settings, strategies as st
 
     from demo_etl_spark.functions.fixedpoint import round_div_expr
+    from tools import oracle_db
+
+    con = oracle_db.connect()
 
     @settings(max_examples=25, deadline=None)
     @given(
@@ -225,7 +227,7 @@ def test_round_div_matches_decimal_half_up_in_both_dialects(spark):
         got_spark = spark.sql(
             f"SELECT {round_div_expr(str(p), str(q), s, 'spark')} AS v"
         ).first()["v"]
-        got_duck = duckdb.sql(
+        got_duck = con.sql(
             f"SELECT {round_div_expr(str(p), str(q), s, 'duckdb')} AS v"
         ).fetchone()[0]
         # tier 1 — engine parity, unconditional (what the oracle hash
@@ -257,11 +259,13 @@ def test_round_div_signed_matches_decimal_half_away(spark):
     satisfies by the documented headroom bounds."""
     import decimal
 
-    import duckdb
     import pytest
     from hypothesis import given, settings, strategies as st
 
     from demo_etl_spark.functions.fixedpoint import round_div_signed_expr
+    from tools import oracle_db
+
+    con = oracle_db.connect()
 
     @settings(max_examples=25, deadline=None)
     @given(
@@ -277,7 +281,7 @@ def test_round_div_signed_matches_decimal_half_away(spark):
         got_spark = spark.sql(
             f"SELECT {round_div_signed_expr(str(p), str(q), s, 'spark')} AS v"
         ).first()["v"]
-        got_duck = duckdb.sql(
+        got_duck = con.sql(
             f"SELECT {round_div_signed_expr(str(p), str(q), s, 'duckdb')} AS v"
         ).fetchone()[0]
         # tier 1 — engine parity, unconditional (what the oracle hash

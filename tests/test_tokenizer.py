@@ -235,7 +235,7 @@ def test_bpe_oracles_survive_merge_exhaustion(spark):
     table FIXED through the empty rounds (r10 review: its NULL scalar
     subqueries used to NULL every sym, flipping bpe_roundtrip/encode/
     vocab_coverage oracles red on exactly this corpus class)."""
-    import duckdb
+    from tools import oracle_db
 
     from demo_etl_spark.operators.tokenizer import (
         ORACLE_SQL_BPE_ENCODE,
@@ -248,7 +248,7 @@ def test_bpe_oracles_survive_merge_exhaustion(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    con = duckdb.connect()
+    con = oracle_db.connect()
     con.execute(
         "CREATE TABLE documents AS SELECT * FROM (VALUES "
         + ", ".join(str(r) for r in rows)

@@ -42,7 +42,7 @@ def _spark_name(dt) -> str:
 
 
 def main() -> int:
-    import duckdb
+    from tools import oracle_db
     from demo_etl_spark.session import get_spark
     import __spark_entry__ as entrymod
 
@@ -50,7 +50,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     spark = get_spark("audit-types")
-    con = duckdb.connect()
+    con = oracle_db.connect()
     for t in ("region nation customer supplier part orders lineitem "
               "events documents embeddings").split():
         con.execute(

@@ -84,7 +84,7 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
 
 
 def main() -> int:
-    import duckdb
+    from tools import oracle_db
     from demo_etl_spark.session import get_spark
     import __spark_entry__ as entrymod
 
@@ -92,7 +92,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     spark = get_spark("verify-oracle")
-    con = duckdb.connect()
+    con = oracle_db.connect()
     for t in ("region nation customer supplier part orders lineitem "
               "events documents embeddings").split():
         con.execute(
