@@ -134,8 +134,8 @@ def warm_operator_memos(spark, sf_dir: str) -> None:
     """Pre-build every registered shared memo for ``sf_dir``.
 
     Idempotent (each warmer hits its session memos) and safe to call
-    after clear_operator_memos() — bench.py times this call as
-    ``memo_warmup_sec`` so per-query figures measure the query."""
+    after clear_operator_memos(). bench.py runs the same warmers one by
+    one, timing each, so per-query figures measure the query."""
     for fn in _MEMO_WARMERS:
         fn(spark, sf_dir)
 

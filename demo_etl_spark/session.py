@@ -21,6 +21,13 @@ from pyspark.sql import SparkSession
 # 4096 holds the whole registry with headroom.
 CODEGEN_CACHE_ENTRIES = 4096
 
+# Finished jobs, and finished stages, the status store keeps (Spark's
+# default is 1000 of each). One bench.py pass over the registry at sf0.001
+# runs ~1,200 jobs and ~1,200 completed stages, and a run has 2-3 passes;
+# bench.py reads the store once at the end and fails if any job or stage
+# of the run was evicted before then.
+STATUS_STORE_RETAINED = 20000
+
 
 def get_spark(
     app_name: str = "demo-etl-spark",
@@ -64,12 +71,12 @@ def get_spark(
         # concurrent task buffers or full GCs serialize the whole session
         # (observed: 8g/32 threads → queries degrade 14s → 474s)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-        # UI off by default (bench noise); tools/scaling_slope.py --measure
-        # flips it on via env to read per-stage shuffle/spill bytes from
-        # the REST API. retainedStages sized so a full measured sweep
-        # never evicts a stage out of the cumulative counters.
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
-        .config("spark.ui.retainedStages", "20000")
+        # No UI (it adds noise to timings): bench.py and perfbench read
+        # per-job and per-stage counters straight from the status store,
+        # which Spark fills with the UI off too.
+        .config("spark.ui.enabled", "false")
+        .config("spark.ui.retainedJobs", str(STATUS_STORE_RETAINED))
+        .config("spark.ui.retainedStages", str(STATUS_STORE_RETAINED))
         # stdout hygiene: console progress bars write to the driver's
         # stdout and can interleave with (and truncate) the single JSON
         # line bench.py's consumer parses

@@ -306,16 +306,8 @@ def ephemeral_checkpoint_dir() -> str:
 
 
 def drain_shuffle_partitions(session_parts: str | None) -> int:
-    """State partitions for one drain: ``DEMO_ETL_STREAM_SHUFFLE`` when set,
-    else the session's shuffle partitions capped at 4. Raises ValueError
-    on a knob value that is not an integer >= 1 (0 breaks the drain)."""
-    env_parts = os.environ.get("DEMO_ETL_STREAM_SHUFFLE")
-    if env_parts:
-        if not env_parts.isdecimal() or int(env_parts) < 1:
-            raise ValueError(
-                f"DEMO_ETL_STREAM_SHUFFLE must be an integer >= 1, got {env_parts!r}"
-            )
-        return int(env_parts)
+    """State partitions for one drain: the session's shuffle partitions
+    capped at 4."""
     return min(4, int(session_parts)) if session_parts and session_parts.isdigit() else 4
 
 
@@ -333,28 +325,18 @@ def run_available_now(
     # chosen HERE (it is frozen into a real checkpoint for the query's
     # lifetime). Micro-batch state at test scale is tiny, so every state
     # partition is pure per-batch overhead (store commit + task) — the
-    # r15 A/B (tools/stream_profile.py, sf0.1, reps=2 min) measured
-    # parts=4 better than the former 8 on every JVM drain at BOTH 32 and
-    # 8 cores (e.g. daily_rollup 2.36→1.43 s, purchase_clicks 3.26→2.09 s
-    # at 32c; 2.12→1.51 s and 9.2→2.6 s at 8c) and flat on the Python
-    # stateful drain; parts=2 regressed the Python drain. A production
-    # stream sizes this to its state volume up front, for exactly the
-    # same reason: it cannot be changed without a state rebuild.
-    # DEMO_ETL_STREAM_SHUFFLE overrides (scale-adaptive knob: a real
-    # deployment sets it to state volume / target partition size).
+    # r15 A/B (sf0.1, min of 2 reps) measured parts=4 better than the
+    # former 8 on every JVM drain at BOTH 32 and 8 cores (e.g.
+    # daily_rollup 2.36→1.43 s, purchase_clicks 3.26→2.09 s at 32c;
+    # 2.12→1.51 s and 9.2→2.6 s at 8c) and flat on the Python stateful
+    # drain; parts=2 regressed the Python drain. A production stream
+    # sizes this to its state volume up front, for exactly the same
+    # reason: it cannot be changed without a state rebuild. The state
+    # store provider is the session's
+    # spark.sql.streaming.stateStore.providerClass.
     conf = spark.conf
     prev = conf.get("spark.sql.shuffle.partitions")
-    drain_parts = drain_shuffle_partitions(prev)
-    conf.set("spark.sql.shuffle.partitions", str(drain_parts))
-    # State-store provider knob (r14 verdict item 5): default stays
-    # Spark's HDFSBackedStateStoreProvider (tiny per-drain state on the
-    # RAM-backed checkpoint dir); DEMO_ETL_STREAM_STATE_PROVIDER selects
-    # e.g. RocksDB for stateful streams whose working set outgrows heap.
-    provider_conf = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = conf.get(provider_conf, None)
-    env_provider = os.environ.get("DEMO_ETL_STREAM_STATE_PROVIDER")
-    if env_provider:
-        conf.set(provider_conf, env_provider)
+    conf.set("spark.sql.shuffle.partitions", str(drain_shuffle_partitions(prev)))
     ckpt = ephemeral_checkpoint_dir()
     try:
         q = (
@@ -377,11 +359,6 @@ def run_available_now(
     finally:
         if prev is not None:
             conf.set("spark.sql.shuffle.partitions", prev)
-        if env_provider:
-            if prev_provider is not None:
-                conf.set(provider_conf, prev_provider)
-            else:
-                conf.unset(provider_conf)
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(table_name)
 

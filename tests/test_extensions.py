@@ -890,9 +890,9 @@ def test_transform_with_state_matches_batch_totals(spark, sf_dir):
     assert got == exp
 
 
-def test_stream_shuffle_knob_rejects_bad_values(spark, sf_dir, monkeypatch):
-    """DEMO_ETL_STREAM_SHUFFLE must be an integer >= 1: a bad value fails
-    the drain before it starts and leaves the session conf untouched."""
+def test_stream_drain_caps_shuffle_partitions(spark, sf_dir):
+    """A drain runs on the session's shuffle partitions capped at 4, and a
+    successful drain leaves the session conf as it was."""
     from demo_etl_spark.streaming.event_streams import (
         drain_shuffle_partitions,
         read_events_stream,
@@ -900,21 +900,13 @@ def test_stream_shuffle_knob_rejects_bad_values(spark, sf_dir, monkeypatch):
         tumbling_stream,
     )
 
-    monkeypatch.setenv("DEMO_ETL_STREAM_SHUFFLE", "3")
-    assert drain_shuffle_partitions("8") == 3
-    monkeypatch.delenv("DEMO_ETL_STREAM_SHUFFLE")
     assert drain_shuffle_partitions("8") == 4
     assert drain_shuffle_partitions("2") == 2
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    for bad in ("0", "-2", "four", "2.5"):
-        monkeypatch.setenv("DEMO_ETL_STREAM_SHUFFLE", bad)
-        with pytest.raises(ValueError, match="DEMO_ETL_STREAM_SHUFFLE"):
-            run_available_now(
-                tumbling_stream(read_events_stream(spark, sf_dir)), "bad_knob_test"
-            )
-        assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    assert not spark.catalog.tableExists("bad_knob_test")
+    out = run_available_now(tumbling_stream(read_events_stream(spark, sf_dir)), "t_drain_conf")
+    assert out.count() > 0
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
 
 def test_incremental_dedup_verdicts(spark):

@@ -269,17 +269,18 @@ def test_scaling_slope_bytes_table(tmp_path, capsys):
         os.path.abspath(__file__))), "tools"))
     import scaling_slope
 
+    def record(counters: dict) -> str:
+        """A bench.py record whose pass-1 queries carry these byte counters."""
+        return json.dumps({
+            "queries": {k: 1.0 for k in counters},
+            "passes": [{"queries": {k: {"sec": 1.0, "shuffle_write_bytes": w, "spill_bytes": 0}
+                                    for k, w in counters.items()}}],
+        })
+
     small = tmp_path / "small.json"
     large = tmp_path / "large.json"
-    small.write_text(json.dumps({"sf_dir": "a", "queries": {
-        "linear": {"sec": 1, "shuffle_write": 1_000_000, "spilled": 0, "input": 0},
-        "blowup": {"sec": 1, "shuffle_write": 100_000, "spilled": 0, "input": 0},
-    }}))
-    large.write_text(json.dumps({"sf_dir": "b", "queries": {
-        "linear": {"sec": 2, "shuffle_write": 10_500_000, "spilled": 0, "input": 0},
-        "blowup": {"sec": 9, "shuffle_write": 5_000_000, "spilled": 0, "input": 0},
-        "fresh": {"sec": 1, "shuffle_write": 7, "spilled": 0, "input": 0},
-    }}))
+    small.write_text(record({"linear": 1_000_000, "blowup": 100_000}))
+    large.write_text(record({"linear": 10_500_000, "blowup": 5_000_000, "fresh": 7}))
     assert scaling_slope.bytes_table(str(small), str(large), 10.0) == 0
     out = capsys.readouterr().out
     assert "| linear | 1,000,000 | 10,500,000 | 10.5x | 0 | ok |" in out

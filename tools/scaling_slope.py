@@ -1,15 +1,19 @@
 """Scaling-slope evidence for the 100x claim (r9 verdict item 7).
 
-Joins two bench runs of the SAME registry at different scale factors and
-prints a markdown table of the slowest queries at the larger SF with the
-observed time ratio vs the data ratio. A query whose time grows faster
-than the data (after subtracting the fixed per-query overhead floor) is
-flagged SUPER-LINEAR and needs a PLANS.md justification or a fix.
+Joins two bench.py records (BENCH_local.json) of the SAME registry at
+different scale factors and prints a markdown table of the slowest
+queries at the larger SF with the observed time ratio vs the data ratio.
+A query whose time grows faster than the data (after subtracting the
+fixed per-query overhead floor) is flagged SUPER-LINEAR and needs a
+PLANS.md justification or a fix.
 
 Usage::
 
     python tools/scaling_slope.py BENCH_small.json BENCH_large.json \
-        [--data-ratio 10] [--top 10]
+        [--data-ratio 10] [--top 10] [--bytes]
+
+``--bytes`` compares the queries' pass-1 shuffle-write and spill bytes
+instead of their seconds.
 
 The per-query floor matters: at sf0.01 most queries cost ~0.1-0.3 s of
 fixed job/stage overhead, so raw ratios UNDER the data ratio are
@@ -22,104 +26,21 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 
 
-# ---------------------------------------------------------------- bytes ----
 # r10 verdict item 7: wall-clock at sf0.01/sf0.1 is overhead-dominated, so
 # BYTE slopes (shuffle write + spill) are the honest linearity evidence.
-# --measure runs named queries against one SF dir and records the per-query
-# DELTA of cumulative completed-stage metrics from the Spark UI REST API
-# (the session factory enables the UI when SPARK_GRAFT_UI=true, which this
-# mode sets before building the session — run it as its own process).
-# --bytes joins two such recordings and prints the ratio table.
-
-def _stage_totals(spark) -> dict[str, int]:
-    import urllib.request
-
-    sc = spark.sparkContext
-    url = (
-        f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
-        "/stages?status=complete"
-    )
-    with urllib.request.urlopen(url, timeout=30) as r:
-        stages = json.load(r)
-    tot = {"shuffle_write": 0, "spilled": 0, "input": 0}
-    for s in stages:
-        tot["shuffle_write"] += s.get("shuffleWriteBytes", 0)
-        tot["spilled"] += s.get("memoryBytesSpilled", 0) + s.get(
-            "diskBytesSpilled", 0
-        )
-        tot["input"] += s.get("inputBytes", 0)
-    return tot
-
-
-def measure(sf_dir: str, names: list[str], out: str, warm: bool = False) -> int:
-    os.environ["SPARK_GRAFT_UI"] = "true"
-    import sys
-    import time
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from demo_etl_spark.session import get_spark
-
-    spark = get_spark()
-    if spark.sparkContext.uiWebUrl is None:
-        raise SystemExit(
-            "Spark UI is off — --measure must run in a fresh process "
-            "(an existing session was joined with spark.ui.enabled=false)"
-        )
-    import __spark_entry__ as entry
-
-    qs = entry.queries()
-    if warm:
-        # r15: mirror bench.py's stage accounting — materialize the scan
-        # cache and every registered session memo BEFORE measuring, so a
-        # query's recorded bytes are the query's own work, not the shared
-        # memo build it happened to trigger first. MUST run after the
-        # __spark_entry__ import above: warmers register at operator-module
-        # import time, so warming before the import is a silent no-op.
-        from demo_etl_spark.io import load_star, warm_operator_memos
-
-        for df in load_star(spark, sf_dir).values():
-            df.count()
-        warm_operator_memos(spark, sf_dir)
-    unknown = [n for n in names if n not in qs]
-    if unknown:
-        raise SystemExit(f"unknown queries: {unknown}")
-    results: dict[str, dict] = {}
-    for name in names:
-        before = _stage_totals(spark)
-        t0 = time.monotonic()
-        # noop sink: executes the full physical plan (every exchange and
-        # spill happens) without driver-side collection
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.monotonic() - t0
-        after = _stage_totals(spark)
-        results[name] = {
-            "sec": round(dt, 3),
-            **{k: after[k] - before[k] for k in after},
-        }
-        print(
-            f"  {name:32s} {dt:6.2f}s shuffle={results[name]['shuffle_write']:>12,}"
-            f" spilled={results[name]['spilled']:>10,}"
-        )
-    with open(out, "w") as fh:
-        json.dump({"sf_dir": sf_dir, "queries": results}, fh, indent=1)
-    print(f"wrote {out}")
-    return 0
-
-
 def bytes_table(small: str, large: str, data_ratio: float) -> int:
     with open(small) as fh:
-        s = json.load(fh)["queries"]
+        s = json.load(fh)["passes"][0]["queries"]
     with open(large) as fh:
-        l = json.load(fh)["queries"]
-    common = sorted(set(s) & set(l), key=lambda k: -l[k]["shuffle_write"])
+        l = json.load(fh)["passes"][0]["queries"]
+    common = sorted(set(s) & set(l), key=lambda k: -l[k]["shuffle_write_bytes"])
     print("| query | shfl_small | shfl_large | ratio | spill_large | verdict |")
     print("|---|---|---|---|---|---|")
     n_super = 0
     for k in common:
-        a, b = s[k]["shuffle_write"], l[k]["shuffle_write"]
+        a, b = s[k]["shuffle_write_bytes"], l[k]["shuffle_write_bytes"]
         ratio = b / a if a > 0 else (float("inf") if b > 0 else 0.0)
         # a byte slope materially above the data ratio means the
         # operator's shuffle grows super-linearly in the input
@@ -127,7 +48,7 @@ def bytes_table(small: str, large: str, data_ratio: float) -> int:
         n_super += super_lin
         r = f"{ratio:.1f}x" if a > 0 else ("new" if b else "0")
         print(
-            f"| {k} | {a:,} | {b:,} | {r} | {l[k]['spilled']:,} "
+            f"| {k} | {a:,} | {b:,} | {r} | {l[k]['spill_bytes']:,} "
             f"| {'SUPER-LINEAR' if super_lin else 'ok'} |"
         )
     print()
@@ -151,31 +72,16 @@ def floor_estimate(times: dict[str, float]) -> float:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("small", nargs="?")
-    ap.add_argument("large", nargs="?")
+    ap.add_argument("small")
+    ap.add_argument("large")
     ap.add_argument("--data-ratio", type=float, default=10.0)
     ap.add_argument("--top", type=int, default=10)
-    ap.add_argument("--measure", metavar="SF_DIR",
-                    help="run queries against SF_DIR recording byte metrics")
-    ap.add_argument("--queries", help="comma-separated query names (--measure)")
-    ap.add_argument("--out", help="output json (--measure)")
-    ap.add_argument("--bytes", nargs=2, metavar=("SMALL", "LARGE"),
-                    help="compare two --measure recordings")
-    ap.add_argument("--warm", action="store_true",
-                    help="warm scan cache + session memos before --measure "
-                         "(bench-stage accounting: per-query bytes exclude "
-                         "shared memo builds)")
+    ap.add_argument("--bytes", action="store_true",
+                    help="compare shuffle-write and spill bytes, not seconds")
     args = ap.parse_args()
 
-    if args.measure:
-        if not (args.queries and args.out):
-            raise SystemExit("--measure requires --queries and --out")
-        return measure(args.measure, args.queries.split(","), args.out,
-                       warm=args.warm)
     if args.bytes:
-        return bytes_table(args.bytes[0], args.bytes[1], args.data_ratio)
-    if not (args.small and args.large):
-        raise SystemExit("need BENCH_small.json BENCH_large.json (or --measure/--bytes)")
+        return bytes_table(args.small, args.large, args.data_ratio)
 
     ts, tl = load(args.small), load(args.large)
     common = sorted(set(ts) & set(tl), key=lambda k: -tl[k])
