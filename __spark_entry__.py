@@ -200,7 +200,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "important_parts_sql": _suite.build_important_parts,
         "jsonl_malformed_ingest": _formats.build_jsonl_malformed_ingest,
         "jsonl_roundtrip": _formats.build_jsonl_roundtrip,
-        "multimodal_features": _multimodal.build_features_checked,
+        "multimodal_features": _multimodal.build_features,
         "packing_policy_compare": _packing.build_packing_policy_compare,
         "part_closure": _graph.build_closure,
         "part_communities": _graph.build_communities,

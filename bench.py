@@ -31,6 +31,7 @@ from collections import Counter
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from perfbench.trace import Span, StatusStore, Tracer, spark_counters, stream_listener  # noqa: E402
+from perfbench.workloads import SWEEP_PATH, memo_warmers  # noqa: E402
 
 
 def log(msg: str) -> None:
@@ -154,6 +155,18 @@ class Recorder:
         return rec
 
 
+def warmers_for(warmers: dict, names) -> dict:
+    """The warmers of the memos that the named queries read, per the
+    ``reads_memos`` that the sweep recorded for each query; every warmer
+    if the sweep does not list one of the queries."""
+    with open(SWEEP_PATH) as fh:
+        reads = {q["name"]: q["reads_memos"] for q in json.load(fh)["queries"]}
+    if any(name not in reads for name in names):
+        return warmers
+    need = {memo for name in names for memo in reads[name]}
+    return {memo: fn for memo, fn in warmers.items() if memo in need}
+
+
 def _drain_split(events: list[dict]) -> dict:
     """Micro-batch count and summed durationMs split of a query's drains."""
     ms: Counter = Counter()
@@ -173,7 +186,6 @@ def main() -> None:
 
     from demo_etl_spark.io import load_star
     from demo_etl_spark.session import get_spark
-    from perfbench.workloads import memo_warmers
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
@@ -221,7 +233,9 @@ def main() -> None:
     # family member runs FIRST, so per-query numbers swung ±6s with the
     # registry order (BENCH_r11: dedup_keep_best 0.13↔6.59s). Each pass
     # builds them in a declared, separately-timed stage, one span per
-    # warmer, so every per-query figure measures the query itself.
+    # warmer, so every per-query figure measures the query itself. A pass
+    # runs only the warmers whose memos its queries read (warmers_for): a
+    # subset or third-sample pass does not pay for memos it never reads.
     #
     # Noise control (r4 → r5): TWO full passes over the registry with the
     # operator memos cleared at the start of each, reported time = min of
@@ -238,7 +252,7 @@ def main() -> None:
     warmers = memo_warmers()
     samples: dict[str, list[float]] = {}
     for _ in (1, 2):
-        for name, t in rec.run_pass(warmers, queries).items():
+        for name, t in rec.run_pass(warmers_for(warmers, queries), queries).items():
             samples.setdefault(name, []).append(t)
     # a ≥3× spread between the two honest samples means one of them hit a
     # VM stall — one more memo-cleared sample settles it
@@ -248,7 +262,7 @@ def main() -> None:
     }
     if spread:
         log(f"bench: third sample for {sorted(spread)}")
-        for name, t in rec.run_pass(warmers, spread).items():
+        for name, t in rec.run_pass(warmers_for(warmers, spread), spread).items():
             samples[name].append(t)
     record = rec.report()
     passes = record["passes"]
@@ -266,12 +280,14 @@ def main() -> None:
     # End-to-end cost (r14 verdict item 1): the timed total EXCLUDES the
     # separately-timed warm-up stages, so moving work into a shared memo
     # lowers `value` without lowering real cost. end_to_end_sec adds the
-    # scan warm-up and the MEAN memo warm-up over the passes run, which
-    # mixes the cold build with re-warms; it is kept unchanged because the
-    # BENCH_r* series is compared on it. What one run of the registry pays
-    # from a cold session is end_to_end_cold_sec (scan warm-up + pass 1);
-    # what a re-run pays in a warm session is end_to_end_steady_sec (pass 2).
-    memo_per_pass = round(sum(memo_warm_s) / len(memo_warm_s), 3)
+    # scan warm-up and the MEAN memo warm-up of passes 1 and 2, which
+    # mixes the cold build with a re-warm; the BENCH_r* series is compared
+    # on it. A third pass warms only its own queries' memos, so counting
+    # it would lower the mean without lowering any cost. What one run of
+    # the registry pays from a cold session is end_to_end_cold_sec (scan
+    # warm-up + pass 1); what a re-run pays in a warm session is
+    # end_to_end_steady_sec (pass 2).
+    memo_per_pass = round(sum(memo_warm_s[:2]) / 2, 3)
     end_to_end = round(total + warm_s + memo_per_pass, 3)
     cold = round(warm_s + pass_cost(passes[0]), 3)
     steady = round(pass_cost(passes[1]), 3)

@@ -87,11 +87,10 @@ _W_EXPR = "(doc_id % {m} + {b})".format(m=DIM_MOD, b=DIM_MIN)
 _H_EXPR = "((doc_id * 3) % {m} + {b})".format(m=DIM_MOD, b=DIM_MIN)
 
 
-def synthesize_media(documents: DataFrame) -> DataFrame:
-    """Build a media table from documents: each payload is a REAL binary
-    PGM (P5) image whose raster is the document's text, space-padded or
-    truncated to w·h. Pure column expressions — the synthesizer itself
-    is JVM-side and shuffle-free.
+def _media_docs(documents: DataFrame) -> DataFrame:
+    """documents → (doc_id, sanitized text, _w, _h): the one projection
+    behind both synthesizers, which add only their magic and bytes per
+    pixel.
 
     ``media_id`` is a real key on BOTH engine sides: a document with a
     NULL or NEGATIVE doc_id is excluded (identity, geometry, and type
@@ -105,7 +104,7 @@ def synthesize_media(documents: DataFrame) -> DataFrame:
     Both pathologies reproduced from the r7 hostile corpus — the
     driver's regenerated corpus can carry rows the pristine local
     testdata never did."""
-    d = (
+    return (
         documents.filter(F.col("doc_id") >= 0)
         .groupBy("doc_id")
         .agg(
@@ -129,39 +128,59 @@ def synthesize_media(documents: DataFrame) -> DataFrame:
             F.expr(_W_EXPR).alias("_w"),
             F.expr(_H_EXPR).alias("_h"),
         )
-        .withColumn("_npix", (F.col("_w") * F.col("_h")).cast("int"))
     )
+
+
+def _netpbm_payload(magic: str, channels: int):
+    """The ``payload`` column over ``_media_docs``: a ``<magic> w h 255``
+    header, then the text space-padded/truncated to channels·w·h
+    bytes."""
     header = F.concat(
-        F.lit("P5 "),
+        F.lit(magic + " "),
         F.col("_w").cast("string"),
         F.lit(" "),
         F.col("_h").cast("string"),
         F.lit(" 255\n"),
     )
-    raster = F.expr("rpad(text, _npix, ' ')")
-    return d.select(
+    raster = F.expr(f"rpad(text, CAST(_w * _h * {channels} AS INT), ' ')")
+    return F.encode(F.concat(header, raster), "utf-8").alias("payload")
+
+
+def synthesize_media(documents: DataFrame) -> DataFrame:
+    """Build a media table from documents: each payload is a REAL binary
+    PGM (P5) image whose raster is the document's text, space-padded or
+    truncated to w·h. Pure column expressions — the synthesizer itself
+    is JVM-side and shuffle-free. Identity rules: ``_media_docs``."""
+    return _media_docs(documents).select(
         F.col("doc_id").alias("media_id"),
         F.element_at(
             F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
             (F.col("doc_id") % 3 + 1).cast("int"),
         ).alias("media_type"),
-        F.encode(F.concat(header, raster), "utf-8").alias("payload"),
+        _netpbm_payload("P5", 1),
         F.col("doc_id").alias("source_doc_id"),
     )
 
 
-def decode_pgm(payload: bytes) -> tuple[int, int, bytes]:
-    """REAL binary-PGM (P5) decode: parse the netpbm header (tokens
-    separated by arbitrary whitespace; ``#`` comments run to end of
-    line), validate maxval, return (width, height, raster bytes).
+def _decode_netpbm(
+    payload: bytes, magic: bytes, channels: int
+) -> tuple[int, int, bytes]:
+    """REAL binary-netpbm decode: parse the header (tokens separated by
+    arbitrary whitespace; ``#`` comments run to end of line), validate
+    maxval, return (width, height, raster bytes) with the raster sliced
+    to channels·w·h bytes.
 
-    This is the full P5 grammar, not a fake — it decodes any 8-bit PGM
-    file, not just the synthesizer's output. Swap for ``PIL.Image.open``
-    to add compressed formats; the callers never change.
+    This is the full P5/P6 grammar, not a fake — it decodes any 8-bit
+    PGM or PPM file, not just the synthesizer's output. Swap for
+    ``PIL.Image.open`` to add compressed formats; the callers never
+    change. The error strings name the format (``PGM``/``P5`` or
+    ``PPM``/``P6``) and reach ``media_decode_audit.decode_reason``
+    unchanged, so a refactor here must keep them byte-for-byte.
     """
+    kind = {b"P5": "PGM", b"P6": "PPM"}[magic]
     payload = bytes(payload)
-    if payload[:2] != b"P5":
-        raise ValueError("not a binary PGM (P5) payload")
+    if payload[:2] != magic:
+        raise ValueError(f"not a binary {kind} ({magic.decode()}) payload")
     pos, fields = 2, []
     while len(fields) < 3:
         while pos < len(payload) and payload[pos : pos + 1].isspace():
@@ -174,13 +193,25 @@ def decode_pgm(payload: bytes) -> tuple[int, int, bytes]:
         while pos < len(payload) and not payload[pos : pos + 1].isspace():
             pos += 1
         if start == pos:
-            raise ValueError("truncated PGM header")
+            raise ValueError(f"truncated {kind} header")
         fields.append(int(payload[start:pos]))
     pos += 1  # exactly one whitespace byte separates maxval from raster
     width, height, maxval = fields
     if not 0 < maxval < 256:
-        raise ValueError(f"unsupported PGM maxval {maxval}")
-    return width, height, payload[pos : pos + width * height]
+        raise ValueError(f"unsupported {kind} maxval {maxval}")
+    return width, height, payload[pos : pos + channels * width * height]
+
+
+def decode_pgm(payload: bytes) -> tuple[int, int, bytes]:
+    """Grayscale binding of ``_decode_netpbm``: magic ``P5``, one byte
+    per pixel."""
+    return _decode_netpbm(payload, b"P5", 1)
+
+
+def decode_ppm(payload: bytes) -> tuple[int, int, bytes]:
+    """Color binding of ``_decode_netpbm``: magic ``P6``, a 3-byte RGB
+    pixel, so raster byte j carries channel j mod 3."""
+    return _decode_netpbm(payload, b"P6", 3)
 
 
 #: dimension sanity bound for the ingest quarantine: a hostile header
@@ -191,49 +222,71 @@ MAX_MEDIA_DIM = 1 << 20
 
 
 def decode_pgm_safe(
-    payload,
+    payload, channels: int = 1
 ) -> tuple[int | None, int | None, bytes | None, str | None]:
-    """TOTAL twin of ``decode_pgm`` — the media ingest quarantine
-    (r10 hostile wave 6). Returns ``(w, h, raster, None)`` for a
-    decodable payload and ``(None, None, None, reason)`` otherwise;
-    never raises. Quarantined classes: NULL payload, wrong magic,
-    truncated/non-numeric header, bad maxval, non-positive or
+    """TOTAL twin of the netpbm decoders — the media ingest quarantine
+    (r10 hostile wave 6). ``channels`` picks the binding: 1 decodes
+    with ``decode_pgm``, 3 with ``decode_ppm``. Returns ``(w, h, raster,
+    None)`` for a decodable payload and ``(None, None, None, reason)``
+    otherwise; never raises. Quarantined classes: NULL payload, wrong
+    magic, truncated/non-numeric header, bad maxval, non-positive or
     memory-bomb dimensions, raster shorter than the header promises.
-    Every media operator routes through this, so one hostile payload
+    Every media operator routes through this (the kernels via
+    ``_media_map``, the audit directly), so one hostile payload
     quarantines ONE row instead of crashing the job — the same
     dead-letter policy io.timed_events applies to events."""
+    # before the decode: bytes(None) raises TypeError, which the catch
+    # below does not cover (found by the r13 symmetric P6 hostile wave)
     if payload is None:
         return None, None, None, "null_payload"
     try:
-        w, h, raster = decode_pgm(payload)
+        w, h, raster = (decode_pgm if channels == 1 else decode_ppm)(payload)
     except (ValueError, IndexError, OverflowError) as exc:
         return None, None, None, f"undecodable: {exc}"
     if w <= 0 or h <= 0:
         return None, None, None, "non_positive_dims"
     if w > MAX_MEDIA_DIM or h > MAX_MEDIA_DIM:
         return None, None, None, "oversized_dims"
-    if len(raster) < w * h:
+    if len(raster) < channels * w * h:
         return None, None, None, "raster_shorter_than_header"
     return w, h, raster, None
 
 
-def _decodable(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Quarantine filter for one Arrow batch: keep rows with an identity
-    and a decodable payload (drop = dead-letter; the audit query is the
-    place that REPORTS the drops)."""
-    keep = pdf["media_id"].notna() & pdf["payload"].map(
-        lambda p: decode_pgm_safe(p)[3] is None
-    )
-    return pdf[keep]
+_PANDAS_INT = {LongType: "int64", IntegerType: "int32"}
 
 
-def _decoded(pdf: pd.DataFrame):
-    """Quarantine + decode in ONE parse per row (r10 review: the
-    filter-then-reparse shape decoded every payload twice). Returns
-    (kept rows, aligned Series of (w, h, raster) triples)."""
-    safe = pdf["payload"].map(decode_pgm_safe)
-    keep = pdf["media_id"].notna() & safe.map(lambda t: t[3] is None)
-    return pdf[keep], safe[keep]
+def _media_map(
+    media: DataFrame, schema: StructType, row_fn, channels: int = 1
+) -> DataFrame:
+    """The one Arrow batch loop of the media kernels (mapInPandas, so
+    it keeps partitioning and adds no shuffle). A row with a NULL
+    ``media_id`` or a payload that fails ``decode_pgm_safe`` is dropped
+    (dead letter; ``media_decode_audit`` is the place that REPORTS the
+    drops). Every kept row is decoded ONCE (r10 review: a
+    filter-then-reparse shape decoded every payload twice) and passed as
+    ``row_fn(row, w, h, raster)``, where ``row`` has the input's columns
+    as attributes (only ``media_id`` and ``payload`` are required); it
+    returns 0..N output tuples in ``schema`` order. Each batch is typed
+    from ``schema``: a batch with no output rows would otherwise carry
+    object columns that Arrow cannot cast."""
+    cols = [f.name for f in schema.fields]
+    ints = {
+        f.name: _PANDAS_INT[type(f.dataType)]
+        for f in schema.fields
+        if type(f.dataType) in _PANDAS_INT
+    }
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = []
+            kept = pdf[pdf["media_id"].notna()]
+            for row in kept.itertuples(index=False):
+                w, h, raster, err = decode_pgm_safe(row.payload, channels)
+                if err is None:
+                    rows.extend(row_fn(row, w, h, raster))
+            yield pd.DataFrame(rows, columns=cols).astype(ints)
+
+    return media.mapInPandas(batches, schema)
 
 
 def extract_features(media: DataFrame) -> DataFrame:
@@ -241,23 +294,11 @@ def extract_features(media: DataFrame) -> DataFrame:
     width/height come from the real ``decode_pgm`` parse of each payload;
     undecodable rows are quarantined (dropped), never a crash."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf, dec = _decoded(pdf)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "byte_len": pdf["payload"].map(len).astype("int32"),
-                    "width": dec.map(lambda t: t[0]).astype("int32"),
-                    "height": dec.map(lambda t: t[1]).astype("int32"),
-                    "feature_hash": pdf["payload"].map(
-                        lambda b: hashlib.md5(b).hexdigest()
-                    ),
-                }
-            )
+    def row(r, w, h, raster):
+        md5 = hashlib.md5(r.payload).hexdigest()
+        return [(r.media_id, r.media_type, len(r.payload), w, h, md5)]
 
-    return media.mapInPandas(batches, FEATURE_SCHEMA)
+    return _media_map(media, FEATURE_SCHEMA, row)
 
 
 RESIZE_TARGET = (32, 32)
@@ -302,23 +343,11 @@ def resize_media(media: DataFrame, target: tuple[int, int] = RESIZE_TARGET) -> D
     w_t, h_t = target
     out_header = f"P5 {w_t} {h_t} 255\n".encode()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf, dec = _decoded(pdf)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "width": w_t,
-                    "height": h_t,
-                    "resized_payload": dec.map(
-                        lambda t: out_header
-                        + _resize_nearest(t[2], t[0], t[1], w_t, h_t)
-                    ),
-                }
-            )
+    def row(r, w, h, raster):
+        out = out_header + _resize_nearest(raster, w, h, w_t, h_t)
+        return [(r.media_id, r.media_type, w_t, h_t, out)]
 
-    return media.mapInPandas(batches, RESIZED_SCHEMA)
+    return _media_map(media, RESIZED_SCHEMA, row)
 
 
 def sample_frames(
@@ -329,28 +358,16 @@ def sample_frames(
     keyframes via libav). Demonstrates the 1→N exploding UDF shape —
     output rows ≠ input rows, schema declared up front."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "media_id": [], "frame_index": [], "frame_offset": [], "frame_hash": []
-            }
-            pdf = _decodable(pdf)
-            vids = pdf[pdf["media_type"] == "video"]
-            for mid, payload in zip(vids["media_id"], vids["payload"]):
-                raw = bytes(payload)
-                for i, off in enumerate(range(0, len(raw), every)):
-                    chunk = raw[off:off + every]
-                    out["media_id"].append(mid)
-                    out["frame_index"].append(i)
-                    out["frame_offset"].append(off)
-                    out["frame_hash"].append(hashlib.md5(chunk).hexdigest())
-            # explicit dtypes: a video-free batch yields 0 rows and pandas
-            # would otherwise infer object columns Arrow can't cast
-            yield pd.DataFrame(out).astype(
-                {"media_id": "int64", "frame_index": "int32", "frame_offset": "int32"}
-            )
+    def row(r, w, h, raster):
+        if r.media_type != "video":
+            return []
+        raw = r.payload
+        return [
+            (r.media_id, i, off, hashlib.md5(raw[off:off + every]).hexdigest())
+            for i, off in enumerate(range(0, len(raw), every))
+        ]
 
-    return media.mapInPandas(batches, FRAME_SCHEMA)
+    return _media_map(media, FRAME_SCHEMA, row)
 
 
 def build_features(
@@ -358,12 +375,6 @@ def build_features(
 ) -> DataFrame:
     docs = load_star(spark, sf_dir)["documents"]
     return extract_features(synthesize_media(docs))
-
-
-# kept as an alias: the registered query now oracle-checks ALL six
-# columns because width/height are really decoded from the payload and
-# the oracle can recompute the embedded header fields
-build_features_checked = build_features
 
 
 # DuckDB twin of the sanitized raster text: the synthesis replaces every
@@ -379,12 +390,10 @@ _MEDIA_SRC = (
     "FROM documents WHERE doc_id >= 0 GROUP BY doc_id)"
 ).format(s=_SANITIZE_SQL)
 
-_TEXT_SQL = "text"
-
 _PAYLOAD_SQL = (
     "'P5 ' || CAST({w} AS VARCHAR) || ' ' || CAST({h} AS VARCHAR) || ' 255' "
-    "|| chr(10) || rpad({t}, CAST({w} * {h} AS INT), ' ')"
-).format(w=_W_EXPR, h=_H_EXPR, t=_TEXT_SQL)
+    "|| chr(10) || rpad(text, CAST({w} * {h} AS INT), ' ')"
+).format(w=_W_EXPR, h=_H_EXPR)
 
 ORACLE_SQL_FEATURES = f"""
 WITH m AS (
@@ -455,29 +464,14 @@ def audio_features(media: DataFrame) -> DataFrame:
     mapInPandas batch shape as the image branch, same real decode
     (decode_pgm strips the container header); swap in soundfile/libav
     for real codecs — the Spark-side plumbing is identical."""
-    import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf, dec = _decoded(pdf)
-            ids, ns, peaks, energies = [], [], [], []
-            for mid, (_, _, raster, _) in zip(pdf["media_id"], dec):
-                s = np.frombuffer(raster, dtype=np.uint8).astype(np.int64) - 128
-                ids.append(mid)
-                ns.append(len(s))
-                peaks.append(int(np.abs(s).max()) if len(s) else 0)
-                energies.append(int((s * s).sum()))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "n_samples": pd.array(ns, dtype="int32"),
-                    "peak_amplitude": pd.array(peaks, dtype="int32"),
-                    "energy": pd.array(energies, dtype="int64"),
-                }
-            )
+    def row(r, w, h, raster):
+        s = np.frombuffer(raster, dtype=np.uint8).astype(np.int64) - 128
+        peak = int(np.abs(s).max()) if len(s) else 0
+        return [(r.media_id, len(s), peak, int((s * s).sum()))]
 
-    return media.filter(F.col("media_type") == "audio").mapInPandas(
-        batches, AUDIO_SCHEMA
+    return _media_map(
+        media.filter(F.col("media_type") == "audio"), AUDIO_SCHEMA, row
     )
 
 
@@ -491,7 +485,7 @@ def build_audio_features(
 # ------------------------------------------------ decode-audit branch ----
 def media_decode_audit(media: DataFrame) -> DataFrame:
     """Per-row quarantine report over a media table — the governance twin
-    of ``_decodable``'s silent dead-letter drop: every row (including the
+    of ``_media_map``'s silent dead-letter drop: every row (including the
     undecodable ones the operators skip) gets a verdict + reason, so an
     ingest batch with a spike of broken payloads is VISIBLE, not just
     absent. decode_ok is int (1/0) so the hash gate normalizes across
@@ -555,7 +549,7 @@ FROM {_MEDIA_SRC} docs
 ORACLE_SQL_AUDIO = f"""
 WITH m AS (
   SELECT doc_id,
-         rpad({_TEXT_SQL},
+         rpad(text,
               CAST(({_W_EXPR}) * ({_H_EXPR}) AS INTEGER), ' ') AS raster
   FROM {_MEDIA_SRC} docs WHERE doc_id % 3 = 1
 ),
@@ -632,72 +626,15 @@ GROUP BY media_id, media_type
 
 
 # ------------------------------------------ P6 color-channel branch ----
-def decode_ppm(payload: bytes) -> tuple[int, int, bytes]:
-    """REAL binary-PPM (P6) decode — the COLOR netpbm branch: same
-    token/comment header grammar as ``decode_pgm`` but magic ``P6`` and
-    a 3-byte-per-pixel RGB raster. Kept as its own function (not a
-    parameterized refactor of decode_pgm) so the P5 decoder's
-    error-reason strings — hash-pinned by the media_decode_audit
-    oracle — cannot drift."""
-    payload = bytes(payload)
-    if payload[:2] != b"P6":
-        raise ValueError("not a binary PPM (P6) payload")
-    pos, fields = 2, []
-    while len(fields) < 3:
-        while pos < len(payload) and payload[pos : pos + 1].isspace():
-            pos += 1
-        if payload[pos : pos + 1] == b"#":
-            while pos < len(payload) and payload[pos : pos + 1] != b"\n":
-                pos += 1
-            continue
-        start = pos
-        while pos < len(payload) and not payload[pos : pos + 1].isspace():
-            pos += 1
-        if start == pos:
-            raise ValueError("truncated PPM header")
-        fields.append(int(payload[start:pos]))
-    pos += 1  # exactly one whitespace byte separates maxval from raster
-    width, height, maxval = fields
-    if not 0 < maxval < 256:
-        raise ValueError(f"unsupported PPM maxval {maxval}")
-    return width, height, payload[pos : pos + 3 * width * height]
-
-
 def synthesize_color_media(documents: DataFrame) -> DataFrame:
     """P6 twin of ``synthesize_media``: each payload is a REAL binary
     PPM whose 3·w·h-byte RGB raster is the sanitized document text
     space-padded/truncated — so byte j carries channel j mod 3. Same
-    identity discipline (NULL/negative ids out, duplicate ids collapse
-    to min text) and the same doc_id-modular geometry."""
-    d = (
-        documents.filter(F.col("doc_id") >= 0)
-        .groupBy("doc_id")
-        .agg(
-            F.min(
-                F.regexp_replace(
-                    F.coalesce(F.col("text"), F.lit("")), "[^ -~]", "?"
-                )
-            ).alias("text")
-        )
-        .select(
-            "doc_id",
-            "text",
-            F.expr(_W_EXPR).alias("_w"),
-            F.expr(_H_EXPR).alias("_h"),
-        )
-        .withColumn("_nbytes", (F.col("_w") * F.col("_h") * 3).cast("int"))
-    )
-    header = F.concat(
-        F.lit("P6 "),
-        F.col("_w").cast("string"),
-        F.lit(" "),
-        F.col("_h").cast("string"),
-        F.lit(" 255\n"),
-    )
-    raster = F.expr("rpad(text, _nbytes, ' ')")
-    return d.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.concat(header, raster), "utf-8").alias("payload"),
+    ``_media_docs`` projection: identity discipline (NULL/negative ids
+    out, duplicate ids collapse to min text) and doc_id-modular
+    geometry."""
+    return _media_docs(documents).select(
+        F.col("doc_id").alias("media_id"), _netpbm_payload("P6", 3)
     )
 
 
@@ -724,44 +661,20 @@ def color_channel_stats(media: DataFrame) -> DataFrame:
     stride-3 slices of the raster give each channel's sum/min/max; the
     mean is exact HALF_UP ×100 in pure Python integers — the same
     (s·200 + n) div (2n) spelling as functions.fixedpoint, so the SQL
-    twin reproduces every value bit-for-bit. Undecodable or
-    short-raster payloads quarantine (drop), never crash the batch."""
+    twin reproduces every value bit-for-bit. Undecodable, non-positive
+    or short-raster payloads quarantine (drop) through the same safe
+    decode as the grayscale kernels, never crash the batch."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                # identity-less or payload-less rows quarantine before
-                # the decoder sees them (NULL payload raises TypeError
-                # inside bytes(), which the decode catch never covered —
-                # found by the r13 symmetric P6 hostile wave)
-                if mid is None or pd.isna(mid) or payload is None:
-                    continue
-                try:
-                    w, h, raster = decode_ppm(payload)
-                except (ValueError, IndexError):
-                    continue
-                n = w * h
-                if n <= 0 or len(raster) != 3 * n:
-                    continue
-                arr = np.frombuffer(bytes(raster), dtype=np.uint8)
-                rec = [mid, w, h]
-                means, mins, maxs = [], [], []
-                for c in range(3):
-                    ch = arr[c::3]
-                    s = int(ch.sum(dtype=np.int64))
-                    means.append((s * 200 + n) // (2 * n))
-                    mins.append(int(ch.min()))
-                    maxs.append(int(ch.max()))
-                rec += means + [
-                    mins[0], maxs[0], mins[1], maxs[1], mins[2], maxs[2]
-                ]
-                rows.append(rec)
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in COLOR_SCHEMA.fields]
-            )
+    def row(r, w, h, raster):
+        n = w * h
+        arr = np.frombuffer(raster, dtype=np.uint8)
+        chans = [arr[c::3] for c in range(3)]
+        sums = [int(ch.sum(dtype=np.int64)) for ch in chans]
+        means = [(t * 200 + n) // (2 * n) for t in sums]
+        limits = [int(f(ch)) for ch in chans for f in (np.min, np.max)]
+        return [(r.media_id, w, h, *means, *limits)]
 
-    return media.mapInPandas(batches, COLOR_SCHEMA)
+    return _media_map(media, COLOR_SCHEMA, row, channels=3)
 
 
 def build_color_channels(
@@ -896,35 +809,21 @@ def dhash_signatures(media: DataFrame) -> DataFrame:
     the 72 sampled grid pixels, via the REAL ``decode_pgm`` parse.
     Arrow-batched mapInPandas, no shuffle; undecodable or identity-less
     rows quarantine (drop) exactly like the other media kernels."""
+    weights = 1 << np.arange(16, dtype=np.int64)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = 1 << np.arange(16, dtype=np.int64)
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if mid is None or pd.isna(mid):
-                    continue
-                w, h, raster, err = decode_pgm_safe(payload)
-                if err is not None:
-                    continue
-                img = np.frombuffer(bytes(raster), dtype=np.uint8)[: w * h]
-                img = img.reshape(h, w)
-                ys = (np.arange(IMG_GRID_ROWS) * h) // IMG_GRID_ROWS
-                xs = (np.arange(IMG_GRID_COLS) * w) // IMG_GRID_COLS
-                g = img[np.ix_(ys, xs)].astype(np.int64)
-                bits = (g[:, :-1] > g[:, 1:]).ravel().astype(np.int64)
-                bands = [
-                    int((bits[b * 16 : (b + 1) * 16] * weights).sum())
-                    for b in range(IMG_BANDS)
-                ]
-                rows.append(
-                    [int(mid), *bands, [int(v) for v in g.ravel()]]
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in DHASH_SCHEMA.fields]
-            )
+    def row(r, w, h, raster):
+        img = np.frombuffer(raster, dtype=np.uint8).reshape(h, w)
+        ys = (np.arange(IMG_GRID_ROWS) * h) // IMG_GRID_ROWS
+        xs = (np.arange(IMG_GRID_COLS) * w) // IMG_GRID_COLS
+        g = img[np.ix_(ys, xs)].astype(np.int64)
+        bits = (g[:, :-1] > g[:, 1:]).ravel().astype(np.int64)
+        bands = [
+            int((bits[b * 16 : (b + 1) * 16] * weights).sum())
+            for b in range(IMG_BANDS)
+        ]
+        return [(r.media_id, *bands, [int(v) for v in g.ravel()])]
 
-    return media.mapInPandas(batches, DHASH_SCHEMA)
+    return _media_map(media, DHASH_SCHEMA, row)
 
 
 def _hamming_col(xa: str, yb: str):
@@ -1600,37 +1499,22 @@ def audio_fingerprint_signatures(media: DataFrame) -> DataFrame:
     """(media_id, b0..b3, grid): 32-bit envelope fingerprint + the 33
     exact window energies, via the REAL container decode. Arrow-batched
     mapInPandas; identity-less/undecodable rows quarantine."""
+    weights = 1 << np.arange(8, dtype=np.int64)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = 1 << np.arange(8, dtype=np.int64)
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if mid is None or pd.isna(mid) or payload is None:
-                    continue
-                w, h, raster, err = decode_pgm_safe(payload)
-                if err is not None:
-                    continue
-                n = w * h
-                s = (
-                    np.frombuffer(bytes(raster), dtype=np.uint8)[:n]
-                    .astype(np.int64)
-                    - 128
-                )
-                bounds = (np.arange(AUDIO_FP_WINDOWS + 1) * n) // AUDIO_FP_WINDOWS
-                sq = np.concatenate(([0], np.cumsum(s * s)))
-                e = sq[bounds[1:]] - sq[bounds[:-1]]  # exact window energies
-                bits = (e[:-1] > e[1:]).astype(np.int64)
-                bands = [
-                    int((bits[b * 8 : (b + 1) * 8] * weights).sum())
-                    for b in range(IMG_BANDS)
-                ]
-                rows.append([int(mid), *bands, [int(v) for v in e]])
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in DHASH_SCHEMA.fields]
-            )
+    def row(r, w, h, raster):
+        n = w * h
+        s = np.frombuffer(raster, dtype=np.uint8).astype(np.int64) - 128
+        bounds = (np.arange(AUDIO_FP_WINDOWS + 1) * n) // AUDIO_FP_WINDOWS
+        sq = np.concatenate(([0], np.cumsum(s * s)))
+        e = sq[bounds[1:]] - sq[bounds[:-1]]  # exact window energies
+        bits = (e[:-1] > e[1:]).astype(np.int64)
+        bands = [
+            int((bits[b * 8 : (b + 1) * 8] * weights).sum())
+            for b in range(IMG_BANDS)
+        ]
+        return [(r.media_id, *bands, [int(v) for v in e])]
 
-    return media.mapInPandas(batches, DHASH_SCHEMA)
+    return _media_map(media, DHASH_SCHEMA, row)
 
 
 def audio_fingerprint_pairs(sig: DataFrame) -> DataFrame:
@@ -1776,29 +1660,14 @@ def video_chunk_hashes(media: DataFrame) -> DataFrame:
     via the REAL decode. Arrow-batched 1→N exploding mapInPandas;
     quarantine as everywhere else."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "media_id": [], "chunk_index": [], "chunk_hash": []
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if mid is None or pd.isna(mid) or payload is None:
-                    continue
-                w, h, raster, err = decode_pgm_safe(payload)
-                if err is not None:
-                    continue
-                raw = bytes(raster)[: w * h]
-                for i, off in enumerate(range(0, len(raw), VIDEO_CHUNK_BYTES)):
-                    out["media_id"].append(int(mid))
-                    out["chunk_index"].append(i)
-                    out["chunk_hash"].append(
-                        hashlib.md5(raw[off : off + VIDEO_CHUNK_BYTES]).hexdigest()
-                    )
-            yield pd.DataFrame(out).astype(
-                {"media_id": "int64", "chunk_index": "int32"}
-            )
+    def row(r, w, h, raster):
+        offsets = range(0, len(raster), VIDEO_CHUNK_BYTES)
+        return [
+            (r.media_id, i, hashlib.md5(raster[o : o + VIDEO_CHUNK_BYTES]).hexdigest())
+            for i, o in enumerate(offsets)
+        ]
 
-    return media.mapInPandas(batches, CHUNK_SCHEMA)
+    return _media_map(media, CHUNK_SCHEMA, row)
 
 
 def video_chunk_pairs(

@@ -33,3 +33,15 @@ def test_bench_pass_records_counters(spark, sf_dir):
         rec._check_retained([{"jobId": rec.first_job + 1, "stageIds": []}], [])
     with pytest.raises(RuntimeError, match="and 1 stages"):
         rec._check_retained([{"jobId": rec.first_job, "stageIds": [7]}], [{"stageId": 6}])
+
+
+def test_bench_warms_only_the_memos_its_queries_read():
+    import bench
+
+    warmers = {name: object() for name in ("customer", "dedup", "multimodal")}
+    # queries the sweep records as reading no memo warm nothing
+    assert bench.warmers_for(warmers, ["regional_rollup", "customer_rfm"]) == {}
+    picked = bench.warmers_for(warmers, ["dedup_image_band_recall", "regional_rollup"])
+    assert picked == {"multimodal": warmers["multimodal"]}
+    # a query the sweep does not list warms every warmer
+    assert bench.warmers_for(warmers, ["regional_rollup", "not_in_sweep"]) == warmers

@@ -258,6 +258,13 @@ def test_media_quarantine_on_hostile_payloads(spark, hostile_dir):
     assert ok_ids == expect_kept
     for r in audit:
         assert (r["decode_reason"] is None) == (r["decode_ok"] == 1)
+    # the decoder's error strings reach the audit unchanged
+    reason = {r["media_id"]: r["decode_reason"] for r in audit}
+    assert reason[10] == "undecodable: not a binary PGM (P5) payload"
+    assert reason[16] == "non_positive_dims"  # 0x0
+    assert reason[25] == "non_positive_dims"  # -2 x -3
+    assert reason[21] == "oversized_dims"  # memory bomb
+    assert reason[22] == "null_payload"
 
     # features/resize keep exactly the decodable rows — no crash
     feats = mm.extract_features(media).collect()
@@ -287,6 +294,13 @@ def test_media_quarantine_on_hostile_payloads(spark, hostile_dir):
     assert (a["n_samples"], a["peak_amplitude"], a["energy"]) == (
         12, 62, 12 * 62 * 62
     )
+
+    # the signature kernels keep exactly the decodable rows too (they
+    # do not filter on media_type, so every kept row gets a signature)
+    for kernel in (mm.dhash_signatures, mm.audio_fingerprint_signatures,
+                   mm.video_chunk_hashes):
+        got = {r["media_id"] for r in kernel(media).collect()}
+        assert got == expect_kept, kernel.__name__
 
 
 def test_chained_dup_corpus_converges_fast(spark):
@@ -740,12 +754,13 @@ def test_json_extractor_parity_fuzz(spark):
 
 def test_color_quarantine_on_hostile_p6_payloads(spark, hostile_dir):
     """r13 hostile wave — the P6 color branch gets the same quarantine
-    coverage as the P5 wave (the decoders are deliberately separate, so
-    their pathology pins must be symmetric): 16-bit maxval, comment
-    welded inside a dimension token (deterministic REJECT under the
-    whitespace-token grammar), over-/under-length rasters, grayscale
-    magic, memory-bomb dims (slice-safe by construction — the 3*w*h
-    length check rejects before any allocation), NULL payload/id."""
+    coverage as the P5 wave: both go through one netpbm decoder and one
+    safe decode, and these pins check that its 3-channel binding rejects
+    the same classes: 16-bit maxval, comment welded inside a dimension
+    token (deterministic REJECT under the whitespace-token grammar),
+    over-/under-length rasters, grayscale magic, memory-bomb dims
+    (oversized_dims, before any allocation), negative dims with a
+    positive product (non_positive_dims), NULL payload/id."""
     from hostile_corpus import HOSTILE_COLOR_MEDIA
     from demo_etl_spark.operators import multimodal as mm
 

@@ -410,10 +410,10 @@ HOSTILE_EMBEDDINGS = [
 #: registers only the ten star views); written as media.parquet in the
 #: hostile dir and consumed by tests/test_oracle_fuzz.py, which drives
 #: every multimodal operator over it and asserts the ingest quarantine
-#: (multimodal.decode_pgm_safe / _decodable) drops EXACTLY the broken
-#: rows instead of crashing the Arrow batch. One valid-but-gnarly PGM
-#: (comments + arbitrary header whitespace) pins that the quarantine
-#: does NOT over-reject.
+#: (multimodal.decode_pgm_safe, applied by every kernel's _media_map
+#: batch loop) drops EXACTLY the broken rows instead of crashing the
+#: Arrow batch. One valid-but-gnarly PGM (comments + arbitrary header
+#: whitespace) pins that the quarantine does NOT over-reject.
 HOSTILE_MEDIA = [
     # (media_id, media_type, payload, source_doc_id, expect_kept)
     # valid baseline: 4x3 raster of 'A'
@@ -432,9 +432,11 @@ HOSTILE_MEDIA = [
     (14, "video", b"P5", 14, False),
     # non-numeric header field
     (15, "image", b"P5 four 3 255\n" + b"E" * 12, 15, False),
-    # 0x0 and negative-looking dims (grammar parses 0; '-' splits token)
+    # 0x0, zero and negative dims: the grammar parses them (int(b"-2")
+    # is -2), the safe decode rejects them as non_positive_dims
     (16, "image", b"P5 0 0 255\n", 16, False),
     (17, "image", b"P5 4 0 255\n", 17, False),
+    (25, "image", b"P5 -2 -3 255\n" + b"K" * 6, 25, False),
     # bad maxval (0, 16-bit, huge)
     (18, "image", b"P5 4 3 0\n" + b"F" * 12, 18, False),
     (19, "image", b"P5 4 3 65535\n" + b"G" * 24, 19, False),
@@ -471,16 +473,18 @@ def build_media_table() -> pa.Table:
 
 
 #: r13 hostile wave — COLOR (P6) payloads, mirroring the P5 wave's
-#: pathology classes so the deliberately-separate decode_ppm branch has
-#: symmetric quarantine coverage (r12 verdict item 7): two-byte-sample
+#: pathology classes so the P6 binding of the shared netpbm decoder and
+#: the 3-channel safe decode have symmetric quarantine coverage (r12
+#: verdict item 7): two-byte-sample
 #: maxval rasters, a comment-inside-a-dimension-token (our grammar reads
 #: whitespace-delimited tokens, so '2#c' is a REJECT — '#' opens a
 #: comment only at token start; pinned as deterministic behavior),
 #: raster over-length (tolerated: the decoder slices), raster
 #: under-length, grayscale magic fed to the color decoder, memory-bomb
-#: dims (safe by construction in the color kernel: Python slicing never
-#: allocates w*h, and the 3*w*h length check fails first — pinned so a
-#: refactor cannot regress it). Consumed by tests/test_oracle_fuzz.py.
+#: dims (rejected as oversized_dims before any allocation; Python
+#: slicing never allocates w*h either), negative dims whose product is
+#: positive (kept with width -2 before the color kernel shared the safe
+#: decode). Consumed by tests/test_oracle_fuzz.py.
 HOSTILE_COLOR_MEDIA = [
     # (media_id, payload, expect_kept)
     # valid baseline: 2x2 RGB raster
@@ -498,9 +502,10 @@ HOSTILE_COLOR_MEDIA = [
     (13, b"P6 2 2", False),
     (14, b"P6 two 2 255\n" + b"E" * 12, False),
     (15, b"P6 2#c\n2 255\n" + b"F" * 12, False),
-    # zero dim
+    # zero dim, negative dims with a positive product
     (16, b"P6 0 2 255\n", False),
-    # memory-bomb dims (slice-safe; length check rejects)
+    (20, b"P6 -2 -3 255\n" + bytes(range(18)), False),
+    # memory-bomb dims (slice-safe; rejected as oversized_dims)
     (17, b"P6 999999999 999999999 255\n" + b"G" * 8, False),
     # raster one byte short of 3*w*h
     (18, b"P6 2 2 255\n" + b"H" * 11, False),
